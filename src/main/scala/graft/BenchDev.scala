@@ -11,16 +11,22 @@ package graft
   * as in Bench. Prints one line per query and a total.
   */
 object BenchDev {
+  private val TopSpec = """top:(.+?)(?::([0-9]+))?""".r
+
+  /** A `top:<file>[:<n>]` spec as (file, n), parsed from the right: a
+    * trailing `:<digits>` is n (default 30) and the rest is the path, so
+    * the path may itself contain ':'. Pure for the spec. */
+  def parseTop(spec: String): (String, Int) = spec match {
+    case TopSpec(file, n) => (file, Option(n).fold(30)(_.toInt))
+    case _ => sys.error("usage: BenchDev top:<file>[:n]")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names: Seq[String] = args.headOption match {
       case Some(spec) if spec.startsWith("top:") =>
-        // limit 3: a file path containing ':' stays intact in parts(1)
-        val parts = spec.split(":", 3)
-        require(parts.length >= 2 && parts(1).nonEmpty,
-          "usage: BenchDev top:<file>[:n]")
-        val (file, n) = (parts(1), if (parts.length > 2) parts(2).toInt else 30)
+        val (file, n) = parseTop(spec)
         val src = scala.io.Source.fromFile(file, "UTF-8")
         val txt = try src.mkString finally src.close()
         """"(q[0-9]+[a-z_0-9]*)":([0-9.]+)""".r.findAllMatchIn(txt)

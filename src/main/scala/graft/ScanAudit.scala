@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.SparkPlan
 /** Construction-time plan recorder for the scan-count gate
   * ([[graft.ScanCount]]).
   *
-  * `OpsKit.pinned` and `GovernanceOps.diskMemo` materialize their inputs
+  * `OpsKit.pinned` and `GovernanceOps.familyMemo` materialize their inputs
   * EAGERLY while a query is being BUILT, so the corpus scans they execute
   * never appear in the final DataFrame's plan — a gate that only walked
   * the final plan would read a heavily-pinned query as "zero scans". When
@@ -21,21 +21,21 @@ object ScanAudit {
   @volatile var enabled = false
   private val plans = mutable.Buffer.empty[(SparkPlan, Boolean)]
 
-  /** `amortized = true` marks a per-battery cost (a diskMemo family
-    * artifact build: it runs for the FIRST query that needs it and never
-    * again for the scratch lifetime). Both gates exclude amortized plans
-    * — including them would make per-query counts and plan signatures
-    * depend on scratch state (fresh box vs warm box), i.e. flaky. The
-    * amortization itself is the family-artifact design the scale story
-    * documents (ONE pair/label build per battery, SURVEY §8). */
+  /** `amortized = true` marks a per-battery cost (a familyMemo artifact
+    * build: it runs for the FIRST query in a session that needs it and
+    * never again in that session). Both gates exclude amortized plans —
+    * including them would make per-query counts and plan signatures
+    * depend on which query ran first, i.e. flaky. The amortization
+    * itself is the family-artifact design the scale story documents
+    * (ONE pair/label build per battery, SURVEY §8). */
   private val amortizedCtx = new ThreadLocal[Boolean] {
     override def initialValue: Boolean = false
   }
 
-  /** Everything recorded while `f` evaluates is amortized — a diskMemo
+  /** Everything recorded while `f` evaluates is amortized — a familyMemo
     * build closure may itself call pinned()/ckpt() helpers, and those
     * inner records must inherit the build's per-battery accounting or
-    * a cold-scratch run counts scans a warm run doesn't (observed on
+    * a building run counts scans a reading run doesn't (observed on
     * q141: cold 2, warm 0, before this scope existed). */
   def amortizedScope[T](f: => T): T = {
     val prev = amortizedCtx.get

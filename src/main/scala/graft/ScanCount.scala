@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *
   * For each registered query it counts, per corpus-scale table, the
   * parquet scans across BOTH the final plan and every construction-time
-  * materialization ([[ScanAudit]] — pinned/ckpt/diskMemo plans, which a
+  * materialization ([[ScanAudit]] — pinned/ckpt/familyMemo plans, which a
   * final-plan walk alone cannot see), deduplicating persist() caches by
   * cache-instance identity and skipping ReusedExchange subtrees. A query
   * scanning the SAME corpus table more than [[MaxScansPerTable]] times
@@ -161,9 +161,9 @@ object ScanCount {
 
   /** Construction + final plans for one registered query — the plan set
     * both the scan gate and the golden signature read. Amortized plans
-    * (diskMemo family-artifact builds) are excluded: they run once per
-    * scratch lifetime, so counting them would make the result depend on
-    * whether the scratch is warm. Callers own cache hygiene
+    * (familyMemo artifact builds) are excluded: they run once per
+    * session and data dir, so counting them would make the result
+    * depend on which query ran first. Callers own cache hygiene
     * (clearCache between queries). */
   def queryPlans(spark: org.apache.spark.sql.SparkSession, name: String,
       dir: String): Seq[SparkPlan] = {

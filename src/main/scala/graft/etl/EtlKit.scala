@@ -3,7 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 
 /** Shared ETL primitives: the reference's scan, coercion, and parse
   * operators as declarative Spark expressions (SURVEY.md §2.1-§2.2).
@@ -21,19 +21,46 @@ object EtlKit {
     * catching a fact table routed through the single-partition mint. */
   val DimIdCap = 1000000L
 
-  /** O-1: CSV scan with header, quoted multi-line nested cells, explicit
-    * schema (reference loader.py:561-568; pandas `read_csv`). PERMISSIVE so
-    * a malformed row degrades to nulls (skip-and-keep-going) instead of
-    * failing the job. */
-  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame =
+  /** O-1: CSV scan with header, quoted multi-line nested cells (reference
+    * loader.py:561-568; pandas `read_csv`). The header line fixes the
+    * column order, so Kaggle's own layouts (extra columns, `id` anywhere)
+    * load as well as the projected fixtures; `schema`'s fields are then
+    * selected by name, as the reference's pandas column lookups do, and a
+    * field the header lacks fails with its name, like pandas' KeyError.
+    * PERMISSIVE so a malformed row degrades to nulls (skip-and-keep-going)
+    * instead of failing the job. */
+  def readCsv(spark: SparkSession, path: String, schema: StructType): DataFrame = {
+    val header = csvHeader(spark, path)
+    val missing = schema.fieldNames.filterNot(header.contains)
+    require(missing.isEmpty,
+      s"$path: header has no column ${missing.mkString(", ")}")
     spark.read
       .option("header", "true")
       .option("multiLine", "true")
       .option("escape", "\"")
       .option("mode", "PERMISSIVE")
-      .schema(schema)
+      .schema(StructType(header.map(h =>
+        schema.find(_.name == h).getOrElse(StructField(h, StringType)))))
       .csv(path)
+      .select(schema.fieldNames.toSeq.map(col): _*)
       .withColumn(SeqCol, monotonically_increasing_id())
+  }
+
+  /** The column names on the first line of the first file `path` names
+    * (a file or a glob), read straight through the Hadoop FileSystem (no
+    * Spark job). */
+  private def csvHeader(spark: SparkSession, path: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val first = Option(fs.globStatus(p)).toSeq.flatten.map(_.getPath)
+      .sortBy(_.toString).headOption
+      .getOrElse(throw new java.io.FileNotFoundException(s"no CSV at $path"))
+    val r = new java.io.BufferedReader(
+      new java.io.InputStreamReader(fs.open(first), "UTF-8"))
+    val line = try Option(r.readLine()).getOrElse("") finally r.close()
+    line.stripPrefix("\uFEFF").split(",", -1).toSeq
+      .map(_.trim.stripPrefix("\"").stripSuffix("\""))
+  }
 
   /** Python `int(str)` strict parse: digits only (no floats), else NULL.
     * Used for the cast-or-drop id filters (P-2/P-3, loader.py:122-127). */

@@ -1108,8 +1108,10 @@ object CurationOps {
       (s, d) => {
         val docs = tbl(s, d, "documents")
           .select(col("doc_id"), col("text"), col("lang"), col("source"))
-        val out = java.nio.file.Files
-          .createTempDirectory("graft-q106-publish").toString
+        // a fresh tree per invocation, deleted at JVM exit like q299's
+        val tmp = java.nio.file.Files.createTempDirectory("graft-q106-publish")
+        OpsKit.reapOnExit(tmp)
+        val out = tmp.toString
         graft.sink.CorpusPublish.publish(docs, out, "source", "doc_id", 1000)
         val rowh = conv(substring(md5(concat_ws("\u0001",
           col("doc_id"), col("lang"), col("text"))), 18, 15), 16, 10)
@@ -1148,8 +1150,9 @@ object CurationOps {
       (s, d) => {
         val docs = tbl(s, d, "documents")
           .select(col("doc_id"), col("lang"), col("text"))
-        val out = java.nio.file.Files
-          .createTempDirectory("graft-q255-publish").toString + "/sorted"
+        val tmp = java.nio.file.Files.createTempDirectory("graft-q255-publish")
+        OpsKit.reapOnExit(tmp)
+        val out = tmp.toString + "/sorted"
         val manifest =
           graft.sink.CorpusPublish.publishGlobalSorted(docs, out, "doc_id", 8)
         val rowh = conv(substring(md5(concat_ws("\u0001",

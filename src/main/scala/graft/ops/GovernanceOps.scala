@@ -277,7 +277,7 @@ object GovernanceOps {
     NamedQuery(
       "q47_dedup_clusters",
       (s, d) => {
-        // pairs via the family's disk artifact — q47 is in the shared
+        // pairs via the family artifact — q47 is in the shared
         // family, so it must never re-pay the LSH pass under eviction
         val pairs = sharedPairs(s, d).select(col("id1"), col("id2"))
         minLabelPropagation(
@@ -891,81 +891,21 @@ object GovernanceOps {
               |GROUP BY source""".stripMargin)),
   ) ++ splitAndGovernance
 
-  // ----- disk-backed family memos ---------------------------------------
-  // The closure family (q47/q57/q93/q100/q103/q104/q114/q215/q231) shares
-  // three corpus-row-sized artifacts: the LSH candidate pair set, the
-  // StarCC closure labels, and the per-document curation decisions. Until
-  // r9 these were persist()-memoized per (session, dir) — but the
-  // closure's per-round localCheckpoints make every run's plan
-  // canonically unique, so when battery-wide memory pressure EVICTS the
-  // cached blocks, the plan-keyed CacheManager can never re-match a
-  // rebuild and the family silently pays a full second LSH+closure pass
-  // (BENCH_r09 double-billed it: q47 15.8 s AND q100 6.2 s vs the
-  // designed 8 + 1 s split). A parquet artifact cannot be evicted: the
-  // first arrival builds and atomically publishes (write to a tmp dir,
-  // rename; a racing JVM's loser deletes its tmp and reads the winner),
-  // and every later consumer — in this JVM or any other — pays a
-  // columnar re-read. The path is keyed on the DATA (parquet names +
-  // sizes + mtimes, so a regenerated testdata dir can never serve a
-  // stale artifact) and on every LSH PARAMETER the artifacts depend on
-  // (so a param change invalidates without anyone remembering to bump a
-  // version). At 100 TB this is exactly the checkpoint a real curation
-  // DAG would publish between stages.
+  // ----- near-dup family memo -------------------------------------------
+  // The closure family (q47/q57/q93/q100/q103/q104/q114/q215/q231) and
+  // the HyperANF pair (q261/q269) share corpus-row-sized artifacts: the
+  // LSH candidate pair set, the StarCC and LPA labels, the per-document
+  // curation decisions and the per-round ANF registers and balls. Each is
+  // built once per session and data dir, written as parquet, and every
+  // later consumer in that session reads the parquet. Parquet rather than
+  // persist(): the closure's per-round localCheckpoints make its plan
+  // canonically unique, so once the cached blocks are evicted the
+  // CacheManager can never re-match a rebuild and the family would
+  // silently pay its builds a second time; a file cannot be evicted. The
+  // files live in one per-JVM directory that is deleted at JVM exit, so
+  // no run ever reads what another run built.
 
-  // Scratch resolution: spark.graft.scratch.dir (session conf — on a real
-  // cluster this MUST be a shared filesystem every JVM can reach, e.g.
-  // hdfs:///tmp/graft-scratch), then -Dgraft.scratch.dir, then the local
-  // tmpdir (single-JVM sandbox default). ALL probe/publish/cleanup I/O
-  // below goes through org.apache.hadoop.fs.FileSystem resolved from the
-  // path itself, so an hdfs:// or file:// root works identically — the
-  // same discipline sink/CorpusPublish uses for its markers. Object-store
-  // caveat (documented at CorpusPublish too): S3A "rename" is copy+delete
-  // and not atomic, so a racing loser could observe a half-copied dest;
-  // point the scratch root at a rename-atomic FS (HDFS, NFS, local disk).
-  private def scratchRoot: String =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(_.conf.getOption("spark.graft.scratch.dir"))
-      .orElse(sys.props.get("graft.scratch.dir"))
-      .getOrElse(sys.props("java.io.tmpdir") + "/graft-scratch")
-
-  private def hadoopConf(): org.apache.hadoop.conf.Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .map(_.sessionState.newHadoopConf())
-      .getOrElse(new org.apache.hadoop.conf.Configuration())
-
-  private def fsFor(p: org.apache.hadoop.fs.Path):
-      org.apache.hadoop.fs.FileSystem = p.getFileSystem(hadoopConf())
-
-  /** Content key for the data dir: every *.parquet file's path + size +
-    * mtime, RECURSIVELY — Spark-style `table.parquet/` directories
-    * contribute their part files, not the directory inode, so a content
-    * change that preserves the directory mtime (rsync -t, archive
-    * extraction) still rolls the key. */
-  private def dirFingerprint(d: String): String = {
-    val root = new org.apache.hadoop.fs.Path(d)
-    val fs = fsFor(root)
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (fs.exists(root)) {
-      val it = fs.listFiles(root, /* recursive = */ true)
-      while (it.hasNext) {
-        val f = it.next()
-        val p = f.getPath.toUri.getPath
-        if (p.endsWith(".parquet"))
-          entries += s"$p:${f.getLen}:${f.getModificationTime}"
-      }
-    }
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(entries.sorted.mkString("|").getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-  }
-
-  private def familyKey: String =
-    // v2: the decisions artifact gained n_toks (r15 — CorpusBuild's
-    // stage-4 working set derives from the artifact instead of a third
-    // corpus scan); the version bump invalidates pre-r15 scratch trees
-    s"v2-nh${NumHashes}-r${LshRows}-cap${MaxLshBucket}-j0.5"
-
-  /** Build counters: observability for the build-exactly-once contract
+  /** Build counters: observability for the build-once contract
     * (GovernanceMemoSpec asserts they do NOT advance after a forced
     * cache eviction between two family queries). */
   private[graft] val pairsBuilds =
@@ -973,162 +913,71 @@ object GovernanceOps {
   private[graft] val closureBuilds =
     new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private[graft] def artifactPath(d: String, tag: String): String =
-    s"$scratchRoot/${dirFingerprint(d)}-$familyKey/$tag"
+  private val memo = new java.util.concurrent.ConcurrentHashMap[
+    (org.apache.spark.sql.SparkSession, String, String),
+    org.apache.spark.sql.DataFrame]()
+  // builds nest (labels reads pairs), and a computeIfAbsent that updates
+  // its own map from inside the mapping function throws, so a reentrant
+  // lock serializes the builds instead
+  private val buildLock = new java.util.concurrent.locks.ReentrantLock()
 
-  /** Pre-battery scratch observability (r18 verdict item 3): which
-    * disk-memo family artifacts are already published (warm) for this
-    * data dir. Bench records the answer in every capture, so a committed
-    * record discloses whether the closure/anf/decisions build cost is
-    * inside its timed numbers (cold) or was paid by an earlier run —
-    * without this, floors and records measured over a warm scratch were
-    * indistinguishable from cold ones. Returns (key dir, warm tags). */
-  private[graft] def scratchState(d: String): (String, Seq[String]) = {
-    val keyDir = s"$scratchRoot/${dirFingerprint(d)}-$familyKey"
-    val root = new org.apache.hadoop.fs.Path(keyDir)
-    val fs = fsFor(root)
-    val warm =
-      if (!fs.exists(root)) Seq.empty[String]
-      else fs.listStatus(root).toSeq.filter(_.isDirectory)
-        .map(_.getPath.getName).sorted
-    (keyDir, warm)
+  private lazy val scratchDir: java.nio.file.Path = {
+    val p = java.nio.file.Files.createTempDirectory("graft-scratch")
+    OpsKit.reapOnExit(p)
+    p
   }
 
-  private[graft] def diskMemo(s: org.apache.spark.sql.SparkSession,
+  private def familyMemo(s: org.apache.spark.sql.SparkSession,
       d: String, tag: String)(build: => org.apache.spark.sql.DataFrame):
       org.apache.spark.sql.DataFrame = {
-    val path = artifactPath(d, tag)
-    val dest = new org.apache.hadoop.fs.Path(path)
-    val fs = fsFor(dest)
-    def touch(): Unit = try {
-      fs.create(new org.apache.hadoop.fs.Path(path, "_touched"), true)
-        .close()
-    } catch { case _: java.io.IOException => () } // advisory only
-    // Refresh the liveness marker BEFORE this JVM's own sweep and before
-    // the exists/read path (r11 advisor): on a SHARED scratch FS the
-    // liveKey exclusion below only protects THIS JVM's current key from
-    // THIS JVM's sweeper — another JVM sweeping a different key judges
-    // ours purely by file mtimes, so the freshness must be on disk
-    // before we commit to reading, not after. The residual window is
-    // one touch-to-read gap instead of an entire build-or-read cycle.
-    if (fs.exists(dest)) touch()
-    gcScratchOnce(fs, liveKey = s"${dirFingerprint(d)}-$familyKey")
-    if (!fs.exists(dest)) {
-      val tmp = new org.apache.hadoop.fs.Path(
-        path + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
-      // artifact builds scan the corpus once per scratch LIFETIME, not
-      // per query — recorded as amortized (scope included: the build
-      // closure's own pinned() calls) so the per-query gates stay
-      // deterministic whether the scratch is fresh or warm
-      val b = graft.ScanAudit.amortizedScope(build)
-      graft.ScanAudit.record(b, amortized = true)
-      b.write.mode("overwrite").parquet(tmp.toString)
-      if (!fs.rename(tmp, dest)) {
-        // A failed rename is benign ONLY when a racing winner already
-        // published dest; anything else (permissions, half state) must
-        // surface here, not as an opaque missing-path read downstream —
-        // and the completed tmp build is left in place for inspection.
-        if (fs.exists(dest)) { fs.delete(tmp, true); () }
-        else throw new IllegalStateException(
-          s"diskMemo: publish rename $tmp -> $dest failed with no " +
-            "racing winner present; completed build left at the tmp path")
-      }
-    }
-    // liveness touch after publish too: parquet reads never bump any
-    // mtime, so record the USE explicitly — the GC judges age by the
-    // newest file inside an entry, and this underscore file (invisible
-    // to Spark's reader, like CorpusPublish's _manifest) is refreshed
-    // on every access
-    touch()
-    s.read.parquet(path)
-  }
-
-  /** Once per JVM: prune scratch entries whose artifacts have not been
-    * USED within the retention window (default 7 days, override with
-    * spark.graft.scratch.ttlHours). Fingerprint keys roll whenever the
-    * source data or LSH params change, so without a sweep the scratch
-    * root grows one orphaned directory per regeneration forever. Age is
-    * judged on the newest file INSIDE the entry (directory mtimes are
-    * FS-dependent), and every diskMemo read refreshes the entry's
-    * `_touched` marker — parquet reads alone bump nothing, so without
-    * the marker a still-current artifact would age out while in active
-    * use. Belt and braces: the CURRENT key (the fingerprint this very
-    * call is about to read or publish) is never collected regardless of
-    * age — a guarantee scoped to THIS JVM's sweep only. Cross-JVM, a
-    * different key's reader is protected by the touch-before-read in
-    * diskMemo (its marker refresh lands before it commits to reading),
-    * with a residual touch-to-read race window that a TTL measured in
-    * days makes practically unhittable; a scratch root shared by fleets
-    * with second-scale TTLs would need a real lease protocol instead.
-    * (private[graft] + resettable flag: GovernanceMemoSpec exercises the
-    * sweep directly — TTL eviction, marker liveness, live-key guard.) */
-  private[graft] val scratchGcDone =
-    new java.util.concurrent.atomic.AtomicBoolean
-  private[graft] def gcScratchOnce(fs: org.apache.hadoop.fs.FileSystem,
-      liveKey: String): Unit = {
-    if (!scratchGcDone.compareAndSet(false, true)) return
-    val ttlMs = org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(_.conf.getOption("spark.graft.scratch.ttlHours"))
-      .map(_.toLong).getOrElse(168L) * 3600L * 1000L
-    val cutoff = System.currentTimeMillis() - ttlMs
-    val root = new org.apache.hadoop.fs.Path(scratchRoot)
-    if (!fs.exists(root)) return
-    fs.listStatus(root).foreach { entry =>
-      if (entry.getPath.getName != liveKey) {
-        var newest = entry.getModificationTime
-        val it = fs.listFiles(entry.getPath, true)
-        while (it.hasNext)
-          newest = math.max(newest, it.next().getModificationTime)
-        if (newest < cutoff) { fs.delete(entry.getPath, true); () }
-      }
+    val key = (s, d, tag)
+    Option(memo.get(key)).getOrElse {
+      buildLock.lock()
+      try Option(memo.get(key)).getOrElse {
+        // a build scans the corpus once per session, not per query, so
+        // it is recorded as amortized (scope included: the build's own
+        // pinned() calls) and the per-query scan gates never count it
+        val b = graft.ScanAudit.amortizedScope(build)
+        graft.ScanAudit.record(b, amortized = true)
+        val path = scratchDir.resolve(
+          s"$tag-${java.util.UUID.randomUUID()}").toString
+        b.write.parquet(path)
+        val df = s.read.parquet(path)
+        memo.put(key, df)
+        df
+      } finally buildLock.unlock()
     }
   }
 
   /** The ONE LSH pass over the shared near-dup corpus (id1, id2,
-    * jaccard), disk-published; every family consumer reads this. */
-  private val pairsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    org.apache.spark.sql.DataFrame]()
-
+    * jaccard); every family consumer reads this. */
   private[ops] def sharedPairs(
       s: org.apache.spark.sql.SparkSession, d: String):
       org.apache.spark.sql.DataFrame =
-    pairsMemo.computeIfAbsent((s, d), _ => diskMemo(s, d, "pairs") {
+    familyMemo(s, d, "pairs") {
       pairsBuilds.incrementAndGet()
       lshCandidatePairs(corpusWithNearDups(s, d))
-    })
-
-  /** The q100 per-document decision table (quality → contaminated →
-    * duplicate → keep), shared verbatim by q114's funnel aggregation —
-    * disk-backed (see family note above). */
-  private val decisionMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    org.apache.spark.sql.DataFrame]()
+    }
 
   /** StarCC closure labels (doc_id, cluster_rep) over the shared
-    * near-dup corpus + LSH pair set — disk-backed (see family note
-    * above). q57's cluster report, q93's savings view, q100/q114's
-    * decision table and q103's leakage-free split all read ONE published
-    * labeling. */
-  private val labelsMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    org.apache.spark.sql.DataFrame]()
-
+    * near-dup corpus + LSH pair set (see family note above). q57's
+    * cluster report, q93's savings view, q100/q114's decision table and
+    * q103's leakage-free split all read ONE labeling. */
   private def nearDupLabels(
       s: org.apache.spark.sql.SparkSession, d: String):
       org.apache.spark.sql.DataFrame =
-    labelsMemo.computeIfAbsent((s, d), _ => diskMemo(s, d, "labels") {
+    familyMemo(s, d, "labels") {
       closureBuilds.incrementAndGet()
       val corpus = corpusWithNearDups(s, d)
       val pairs = sharedPairs(s, d).select(col("id1"), col("id2"))
       StarCC.connectedComponents(corpus.select(col("doc_id")), pairs)._1
-    })
+    }
 
   // ---- HyperANF machinery shared by q261 (neighborhood function) and
   // q269 (harmonic centrality): per-node 64-register HLL balls over the
   // near-dup graph, one propagation round = edge⋈register max-merge.
   // Registers are q87's deterministic md5 scheme. The per-round register
-  // tables and exact ball-pair sets are disk-memoized like the family's
+  // tables and exact ball-pair sets are family artifacts like the
   // pairs/labels, so the two consumers (and battery re-runs) pay ONE
   // propagation and ONE set of distinct path joins.
   private def anfEdges(s: org.apache.spark.sql.SparkSession,
@@ -1143,7 +992,7 @@ object GovernanceOps {
       .distinct()
   }
 
-  /** Registers after `r` propagation rounds (rounds ≥ 1 disk-memoized;
+  /** Registers after `r` propagation rounds (rounds ≥ 1 memoized;
     * round 0 is a cheap per-node projection). */
   private def anfRegs(s: org.apache.spark.sql.SparkSession, d: String,
       r: Int): org.apache.spark.sql.DataFrame =
@@ -1158,7 +1007,7 @@ object GovernanceOps {
         .select(col("doc_id"), col("bkt"),
           when(col("v") === 0, lit(55))
             .otherwise(lit(55) - length(bin(col("v")))).as("m"))
-    } else diskMemo(s, d, s"anf-regs$r") {
+    } else familyMemo(s, d, s"anf-regs$r") {
       anfEdges(s, d)
         .join(anfRegs(s, d, r - 1).withColumnRenamed("doc_id", "src"),
           Seq("src"))
@@ -1166,11 +1015,11 @@ object GovernanceOps {
         .agg(max(col("m")).as("m"))
     }
 
-  /** Exact r-hop ball pairs (u, w) — disk-memoized distinct path joins,
+  /** Exact r-hop ball pairs (u, w) — memoized distinct path joins,
     * affordable only because the edge set is LSH-candidate-bounded. */
   private def anfBall(s: org.apache.spark.sql.SparkSession, d: String,
       r: Int): org.apache.spark.sql.DataFrame =
-    diskMemo(s, d, s"anf-b$r") {
+    familyMemo(s, d, s"anf-b$r") {
       if (r == 1)
         anfEdges(s, d).select(col("src").as("u"), col("dst").as("w"))
       else
@@ -1200,28 +1049,25 @@ object GovernanceOps {
     new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** LPA community labels (doc_id, community, comm_size) over the shared
-    * near-dup graph — disk-backed like the StarCC labels. q141 publishes
-    * the three propagation rounds once; q197's modularity reads the SAME
-    * partition instead of re-running them (BENCH_r10's q197 5.5 s was
-    * exactly that duplicated work). */
-  private val lpaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    org.apache.spark.sql.DataFrame]()
-
+    * near-dup graph — a family artifact like the StarCC labels. q141
+    * builds the three propagation rounds once; q197's modularity reads
+    * the SAME partition instead of re-running them (BENCH_r10's q197
+    * 5.5 s was exactly that duplicated work). */
   private def lpaLabels(
       s: org.apache.spark.sql.SparkSession, d: String):
       org.apache.spark.sql.DataFrame =
-    lpaMemo.computeIfAbsent((s, d), _ => diskMemo(s, d, "labels-lpa") {
+    familyMemo(s, d, "labels-lpa") {
       lpaBuilds.incrementAndGet()
       labelPropagation(corpusWithNearDups(s, d).select(col("doc_id")),
         sharedPairs(s, d).select(col("id1"), col("id2")), 3)
-    })
+    }
 
+  /** The q100 per-document decision table (quality → contaminated →
+    * duplicate → keep), shared verbatim by q114's funnel aggregation. */
   private[graft] def curationDecisions(
       s: org.apache.spark.sql.SparkSession, d: String):
       org.apache.spark.sql.DataFrame =
-    decisionMemo.computeIfAbsent((s, d), _ =>
-      diskMemo(s, d, "decisions")(curationDecisionsBuild(s, d)))
+    familyMemo(s, d, "decisions")(curationDecisionsBuild(s, d))
 
   private def curationDecisionsBuild(
       s: org.apache.spark.sql.SparkSession, d: String):
@@ -1231,8 +1077,8 @@ object GovernanceOps {
         val corpus = base.unionByName(base.select(
           (col("doc_id") + 100000).as("doc_id"),
           dropFirstToken(col("text")).as("text"), col("source")))
-        // the published family pair artifact — ONE LSH pass per (data,
-        // params) total, shared with the closure labels build
+        // the family pair artifact — ONE LSH pass per session and data
+        // dir, shared with the closure labels build
         val pairs = sharedPairs(s, d).select(col("id1"), col("id2"))
         val labels = nearDupLabels(s, d)
         val evalIds = base.filter(col("source") === "src19")
@@ -1366,8 +1212,8 @@ object GovernanceOps {
       "q104_source_dup_matrix",
       (s, d) => {
         val docs = tbl(s, d, "documents")
-        // pairs are the published family artifact — one LSH pass per
-        // (data, params), shared with the closure/decision builds
+        // pairs are the family artifact — one LSH pass per session and
+        // data dir, shared with the closure/decision builds
         val pairs = sharedPairs(s, d) // (id1, id2, jaccard)
         val smap = docs.select(col("doc_id"), col("source"))
           .unionByName(docs.select((col("doc_id") + 100000).as("doc_id"),
@@ -1481,7 +1327,7 @@ object GovernanceOps {
     // with q57's run-to-convergence closure is deliberate).
     NamedQuery(
       "q141_label_propagation",
-      // publishes the labels-lpa artifact q197's modularity then reads
+      // builds the labels-lpa artifact q197's modularity then reads
       (s, d) => lpaLabels(s, d),
       Some {
         def round(prev: String, cur: Int): String =
@@ -2331,7 +2177,7 @@ object GovernanceOps {
       "q261_hyperanf",
       (s, d) => {
         // all register/ball machinery shared with q269 via the
-        // disk-memoized anfRegs/anfBall helpers (family-note discipline:
+        // memoized anfRegs/anfBall helpers (family-note discipline:
         // one propagation, every consumer reads the artifact)
         val nodes = corpusWithNearDups(s, d).select(col("doc_id"))
         val nNodes = nodes.agg(count(lit(1)).as("n_nodes"))
@@ -2580,7 +2426,7 @@ object GovernanceOps {
       "q269_harmonic_centrality",
       (s, d) => {
         // the register tables and exact balls are q261's own artifacts
-        // (anfRegs/anfBall disk memos) — this query adds only the
+        // (anfRegs/anfBall memos) — this query adds only the
         // telescoped 1/r weighting on top
         val nodes = corpusWithNearDups(s, d).select(col("doc_id"))
         def ballOf(r: Int, name: String): DataFrame =

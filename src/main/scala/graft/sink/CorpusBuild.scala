@@ -15,7 +15,7 @@ import graft.ops.{GovernanceOps, LlmKit, OpsKit, TextOps}
   * bounded number of times end-to-end:
   *
   *   1. curation decisions (q100): quality → decontamination → near-dup
-  *      closure per document, read from the disk-memoized decision
+  *      closure per document, read from the memoized decision
   *      artifact (ONE LSH + closure pass per battery, amortized);
   *   2. DoReMi mixture weights (q298): 8 Hedge rounds over per-source
   *      excess loss — the reference/proxy LMs come from the SHARED

@@ -247,33 +247,43 @@ class BenchSentinelSpec extends AnyFunSuite {
       === "BENCH_REJECTED_3.json")
   }
 
-  test("fresh summary line always carries the fresh total and per-query map") {
+  test("fresh summary line: fresh total, under 1 KB, points at the fresh record") {
     // r18 verdict item 1: when the overwrite guard fired, the final
-    // stdout line reported the COMMITTED total with queries:{} — the
-    // driver had now_bench_ok:false two rounds running and a genuine
-    // regression would have hidden behind the old fast record. The
-    // summary must report the fresh measurement with the guard verdict
-    // as annotations, in both guard outcomes.
-    val qs = """{"q01_scan_project":0.15,"q92_triangles":2.3}"""
+    // stdout line reported the COMMITTED total. The summary must report
+    // the fresh measurement with the guard verdict as annotations, in
+    // both guard outcomes; it must fit a 2.5 KB log tail whole at the
+    // full battery's size, and `full` must name the file that really
+    // holds the fresh record.
+    val sf = "data/sf0.1"
+    val keptFile = Bench.freshRecordFile(guardFires = true,
+      Set("BENCH_REJECTED.json"))
+    assert(keptFile === "BENCH_REJECTED_2.json")
     val kept = Bench.freshSummaryLine(198.77, gateOk = false,
       keptCommitted = true, committedTotal = Some(146.295),
-      contended = false, qs, "{}", 314, 0, "/root/testdata/sf0.1")
+      contended = false, 314, 0, keptFile, sf)
     assert(kept.contains(""""value":198.77"""))          // FRESH, not committed
     assert(kept.contains(""""gate_ok":false"""))
     assert(kept.contains(""""kept_committed":true"""))
     assert(kept.contains(""""committed_total":146.295""")) // old number kept too
-    assert(kept.contains(""""queries":{"q01_scan_project":0.15"""))
-    assert(kept.count(_ == '{') === kept.count(_ == '}'))
-    // clean path: no committed_total key, gate_ok true, same fresh map
+    assert(kept.contains(""""full":"BENCH_REJECTED_2.json""""))
+    // clean path: no committed_total key, gate_ok true, fresh record in
+    // BENCH_FULL.json
+    val cleanFile = Bench.freshRecordFile(guardFires = false, _ => true)
+    assert(cleanFile === "BENCH_FULL.json")
     val clean = Bench.freshSummaryLine(151.2, gateOk = true,
       keptCommitted = false, committedTotal = None,
-      contended = false, qs, "{}", 314, 0, "/root/testdata/sf0.1")
+      contended = false, 314, 2, cleanFile, sf)
     assert(clean.contains(""""value":151.2"""))
     assert(clean.contains(""""gate_ok":true"""))
     assert(clean.contains(""""kept_committed":false"""))
     assert(!clean.contains("committed_total"))
-    assert(clean.contains(""""queries":{"q01_scan_project":0.15"""))
-    assert(clean.count(_ == '{') === clean.count(_ == '}'))
+    assert(clean.contains(""""full":"BENCH_FULL.json""""))
+    for (line <- Seq(kept, clean)) {
+      assert(line.getBytes("UTF-8").length <= 1024, line)
+      assert(line.contains(""""n_queries":314"""))
+      assert(!line.contains(""""queries":"""), "per-query map is back")
+      assert(line.count(_ == '{') === line.count(_ == '}'))
+    }
   }
 
   test("repass candidate ratio list skips non-positive bests") {

@@ -60,6 +60,57 @@ class EtlKitSpec extends AnyFunSuite {
     assert(graft.etl.EtlKit.badIdCount(raw, "id") == 1) // the 'abc' row
   }
 
+  test("readCsv maps columns by header name: Kaggle layouts load like the fixtures") {
+    // Kaggle's real files order their columns differently from the
+    // projected fixtures (ratings: userId,movieId,rating,timestamp;
+    // credits: cast,crew,id); rewrite the fixtures in those layouts and
+    // require the same rating averages and credits tables
+    val tmp = java.nio.file.Files.createTempDirectory("graft-kaggle-layout")
+    try {
+      def rewrite(fixture: String, schema: org.apache.spark.sql.types.StructType,
+          header: Seq[String], extra: Map[String, String]): String = {
+        def cell(v: String) =
+          if (v == null) "" else "\"" + v.replace("\"", "\"\"") + "\""
+        val rows = readCsv(spark, TestSpark.fixture(fixture), schema).collect()
+          .map(r => header.map(h =>
+            cell(if (schema.fieldNames.contains(h)) r.getAs[String](h)
+              else extra(h))).mkString(","))
+        val f = tmp.resolve(fixture)
+        java.nio.file.Files.write(f,
+          (header.mkString(",") +: rows).mkString("", "\n", "\n")
+            .getBytes("UTF-8"))
+        f.toString
+      }
+      def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+        df.collect().map(_.toString).toSeq.sorted
+
+      val ratings = graft.model.RefSchemas.ratingsCsv
+      val kaggleRatings = rewrite("ratings.csv", ratings,
+        Seq("userId", "movieId", "rating", "timestamp"),
+        Map("userId" -> "7", "timestamp" -> "1260759144"))
+      val avg = sorted(ratingAvg(readCsv(spark, kaggleRatings, ratings)))
+      assert(avg.nonEmpty)
+      assert(avg === sorted(ratingAvg(
+        readCsv(spark, TestSpark.fixture("ratings.csv"), ratings))))
+
+      val kaggleCredits = rewrite("credits.csv",
+        graft.model.RefSchemas.creditsCsv, Seq("cast", "crew", "id"), Map())
+      val got = graft.etl.CreditsPipeline.fromCsv(spark, kaggleCredits)
+      val want = graft.etl.CreditsPipeline.fromCsv(spark,
+        TestSpark.fixture("credits.csv"))
+      assert(sorted(got.persons).nonEmpty)
+      assert(sorted(got.persons) === sorted(want.persons))
+      assert(sorted(got.directors) === sorted(want.directors))
+      assert(sorted(got.actors) === sorted(want.actors))
+
+      // a column the header lacks fails with its name (pandas' KeyError)
+      val ex = intercept[IllegalArgumentException] {
+        readCsv(spark, kaggleRatings, graft.model.RefSchemas.creditsCsv)
+      }
+      assert(ex.getMessage.contains("cast"), ex.getMessage)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(tmp.toFile)
+  }
+
   test("py_to_json registered in spark.sql and usable from SQL text") {
     val got = spark.sql(
       """SELECT py_to_json("[{'id': 1, 'name': 'x'}]") AS j""").head().getString(0)

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.GovernanceOps
 
-/** The closure family's build-exactly-once contract (VERDICT r9 item 1).
+/** The closure family's build-once contract (VERDICT r9 item 1).
   *
   * Until r9 the family's shared artifacts (LSH pair set, StarCC labels,
   * curation decisions) were persist()-memoized; under battery-wide memory
@@ -11,30 +11,25 @@ import graft.ops.GovernanceOps
   * localCheckpoints make every run's plan canonically unique, the
   * CacheManager could never re-match a rebuild — so the battery silently
   * paid the full LSH+closure pass twice (BENCH_r09: q47 15.8 s AND q100
-  * 6.2 s). The fix publishes each artifact once per (data, params) to a
-  * scratch parquet path; this spec forces the eviction that broke r9 and
-  * asserts no rebuild happens.
+  * 6.2 s). Each artifact is now written as parquet once per session and
+  * data dir; this spec forces the eviction that broke r9 and asserts no
+  * rebuild happens, and that a second session builds its own.
   */
 class GovernanceMemoSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
   test("closure artifacts survive cache eviction without a rebuild") {
-    // warm the family: whoever is first pays the one build (or reads an
-    // artifact a previous JVM published for this exact data+params key)
+    // warm the family: whoever is first in this session pays the build
     val labels = SparkEntry.queries("q57_star_clusters")(spark, dir).count()
     assert(labels > 0)
-    assert(new java.io.File(GovernanceOps.artifactPath(dir, "labels")).exists(),
-      "labels artifact not published")
-    assert(new java.io.File(GovernanceOps.artifactPath(dir, "pairs")).exists(),
-      "pairs artifact not published")
     val pb = GovernanceOps.pairsBuilds.get()
     val cb = GovernanceOps.closureBuilds.get()
 
     // the r9 failure mode: evict every cached/persisted block mid-battery
     spark.catalog.clearCache()
 
-    // the next family queries must complete from the disk artifacts —
+    // the next family queries must complete from the parquet artifacts —
     // same row counts, and NO second LSH pass or closure run
     assert(SparkEntry.queries("q103_leakfree_split")(spark, dir).count()
       == labels)
@@ -48,121 +43,32 @@ class GovernanceMemoSpec extends AnyFunSuite {
       "LSH pair set was rebuilt after cache eviction")
     assert(GovernanceOps.closureBuilds.get() == cb,
       "StarCC closure was rebuilt after cache eviction")
-    assert(new java.io.File(GovernanceOps.artifactPath(dir, "decisions"))
-      .exists(), "decisions artifact not published")
-  }
-
-  test("scratchState reports published artifacts as warm, by tag") {
-    // r19 (r18 verdict item 3): Bench records which family artifacts
-    // existed before a battery, so committed records disclose whether
-    // the build cost is inside their numbers. After the eviction test
-    // above ran the family, at least pairs/labels/decisions must be
-    // warm, the key dir must be the artifactPath parent, and the tags
-    // must be sorted (the capture JSON is diffed textually).
-    SparkEntry.queries("q57_star_clusters")(spark, dir).count()
-    val (keyDir, warm) = GovernanceOps.scratchState(dir)
-    assert(GovernanceOps.artifactPath(dir, "labels")
-      .startsWith(keyDir), s"$keyDir is not the artifact parent")
-    assert(Seq("labels", "pairs").forall(warm.contains), warm.toString)
-    assert(warm == warm.sorted, "warm tags must be sorted")
-    // a dir with no artifacts reads cold, not an error
-    val (_, cold) = GovernanceOps.scratchState("/root/testdata/nonexistent")
-    assert(cold.isEmpty)
   }
 
   test("q141 -> q197 shares pairs and LPA labels with zero rebuilds") {
-    // q141 publishes (or reads) the labels-lpa artifact
+    // q141 builds (or reads) the labels-lpa artifact
     assert(SparkEntry.queries("q141_label_propagation")(spark, dir)
       .count() > 0)
     val pb = GovernanceOps.pairsBuilds.get()
     val lb = GovernanceOps.lpaBuilds.get()
     spark.catalog.clearCache() // the r10 regression: no in-memory carryover
-    // q197 must compute modularity purely from the published artifacts
+    // q197 must compute modularity purely from the family artifacts
     assert(SparkEntry.queries("q197_modularity")(spark, dir).count() > 0)
     assert(GovernanceOps.pairsBuilds.get() == pb,
       "q197 re-ran the LSH pass q141's family artifact already paid for")
     assert(GovernanceOps.lpaBuilds.get() == lb,
-      "q197 re-ran the 3 LPA rounds q141 already published")
-    assert(new java.io.File(GovernanceOps.artifactPath(dir, "labels-lpa"))
-      .exists(), "labels-lpa artifact not published")
+      "q197 re-ran the 3 LPA rounds q141 already built")
   }
 
-  test("scratch GC: TTL sweep evicts stale, spares touched and the live key") {
-    // r11 verdict item 4: the sweep had zero spec coverage. Three dirs
-    // under a private scratch root: STALE (every file mtime aged past
-    // the TTL — must be deleted), FRESH (old parquet but a recently
-    // refreshed _touched marker, the active-use shape — must survive,
-    // because age is judged on the NEWEST file inside an entry), and
-    // the CURRENT key's artifact (published by the diskMemo call that
-    // triggers the sweep — must exist after it).
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-gc-spec").toString
-    spark.conf.set("spark.graft.scratch.dir", root)
-    spark.conf.set("spark.graft.scratch.ttlHours", "1")
-    def mkEntry(key: String, ageMs: Long): java.io.File = {
-      val d = new java.io.File(s"$root/$key/pairs")
-      assert(d.mkdirs())
-      val f = new java.io.File(d, "part-00000.parquet")
-      assert(f.createNewFile())
-      val t = System.currentTimeMillis() - ageMs
-      assert(f.setLastModified(t) && d.setLastModified(t) &&
-        d.getParentFile.setLastModified(t))
-      d.getParentFile
-    }
-    val twoHours = 2L * 3600L * 1000L
-    val stale = mkEntry("deadbeef-stale-key", twoHours)
-    val fresh = mkEntry("cafebabe-fresh-key", twoHours)
-    // the active-use shape: the entry's parquet is old but some OTHER
-    // JVM touched its marker recently (what diskMemo's pre-read refresh
-    // writes) — the newest-file rule must keep the whole entry
-    val marker = new java.io.File(new java.io.File(fresh, "pairs"),
-      "_touched")
-    assert(marker.createNewFile())
-    try {
-      // arm the sweep: it runs once per JVM and earlier tests (or the
-      // warm family queries) may already have consumed the shot
-      GovernanceOps.scratchGcDone.set(false)
-      var builds = 0
-      def build() = { builds += 1; spark.range(3).toDF("v") }
-      assert(GovernanceOps.diskMemo(spark, dir, "gcproto")(build())
-        .count() == 3 && builds == 1)
-      assert(!stale.exists(),
-        s"stale entry survived the TTL sweep: $stale")
-      assert(fresh.exists() && marker.exists(),
-        "recently-touched entry was evicted — the liveness marker " +
-          "did not protect active use")
-      assert(new java.io.File(
-        GovernanceOps.artifactPath(dir, "gcproto")).exists(),
-        "current key's artifact missing after its own sweep")
-    } finally {
-      spark.conf.unset("spark.graft.scratch.dir")
-      spark.conf.unset("spark.graft.scratch.ttlHours")
-      GovernanceOps.scratchGcDone.set(false) // don't starve later suites
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
-    }
-  }
-
-  test("memo protocol works end-to-end through a file:// Hadoop FS URI") {
-    // the cluster-real path: scratch root addressed by URI, every probe/
-    // publish/rename below goes through org.apache.hadoop.fs.FileSystem
-    val root = "file:///tmp/graft-scratch-uri-" +
-      java.util.UUID.randomUUID().toString.take(8)
-    spark.conf.set("spark.graft.scratch.dir", root)
-    try {
-      var builds = 0
-      def build() = { builds += 1; spark.range(5).toDF("v") }
-      val first = GovernanceOps.diskMemo(spark, dir, "uriproto")(build())
-      assert(first.count() == 5 && builds == 1)
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sessionState.newHadoopConf())
-      assert(fs.exists(new org.apache.hadoop.fs.Path(
-        GovernanceOps.artifactPath(dir, "uriproto"))),
-        "artifact not visible through the Hadoop FileSystem API")
-      // second arrival must read the published artifact, not rebuild
-      val again = GovernanceOps.diskMemo(spark, dir, "uriproto")(build())
-      assert(again.count() == 5 && builds == 1,
-        "second arrival rebuilt instead of reading the URI artifact")
-      fs.delete(new org.apache.hadoop.fs.Path(root), true)
-    } finally spark.conf.unset("spark.graft.scratch.dir")
+  test("a new session over the same dir builds its own pairs") {
+    // the memo lasts one session: another session must not read what
+    // this one built, yet must arrive at the same pair set
+    val q104 = SparkEntry.queries("q104_source_dup_matrix")
+    val here = q104(spark, dir).count()
+    val pb = GovernanceOps.pairsBuilds.get()
+    val other = spark.newSession()
+    assert(q104(other, dir).count() == here)
+    assert(GovernanceOps.pairsBuilds.get() == pb + 1,
+      "the new session did not build the LSH pair set exactly once")
   }
 }

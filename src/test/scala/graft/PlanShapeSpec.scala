@@ -385,10 +385,11 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("q100 reads the published decision artifact, not a live LSH pass") {
-    // the closure family's artifacts are DISK-published once per (data,
-    // params) — see GovernanceOps' family note; q100 itself must plan as
-    // a pure columnar read of the decisions parquet (a Join or Exchange
-    // here means the memo broke and the query re-pays the LSH+closure)
+    // the closure family's artifacts are written as parquet once per
+    // (session, data dir) — see GovernanceOps' family note; q100 itself
+    // must plan as a pure columnar read of the decisions parquet (a Join
+    // or Exchange here means the memo broke and the query re-pays the
+    // LSH+closure)
     val p = plan("q100_curation_pipeline")
     assert(p.contains("graft-scratch"), s"not reading the artifact:\n$p")
     assert(!p.contains("Join") && !p.contains("Exchange"),
@@ -551,7 +552,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("q103's split adds ZERO shuffles beyond the closure's label attach") {
-    // The closure labels are the disk-published family artifact; the
+    // The closure labels are the parquet family artifact; the
     // leakage-free split itself must be a pure projection over that
     // parquet scan — any Exchange means the 'free' split went
     // distributed.
