@@ -178,8 +178,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = Sessions.local.getOrCreate()
     // ERROR, not WARN: the 80+-query run emits enough WARN noise to push
     // the one JSON result line out of the driver's log-tail capture
     // (BENCH_r05 lost its total line to exactly that)

@@ -23,7 +23,6 @@ object BenchDev {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names: Seq[String] = args.headOption match {
       case Some(spec) if spec.startsWith("top:") =>
         val (file, n) = parseTop(spec)
@@ -39,7 +38,7 @@ object BenchDev {
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown: ${unknown.mkString(",")}")
     val jobs = sys.env.get("SPARK_GRAFT_DEVJOBS").contains("1")
-    val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = Sessions.local.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (jobs) {
       val t = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()

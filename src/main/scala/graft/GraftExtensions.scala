@@ -6,25 +6,21 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{BloomMightContainExpr, HashedShinglesExpr, LshBucket, MinhashSigExpr, Simhash16Expr, VecDot}
 import graft.parse.PyToJson
 
-/** Engine extension point: registers graft's custom Catalyst expressions
-  * with the session's FunctionRegistry so they are callable from both the
-  * DataFrame API (`call_function`) and `spark.sql`.
-  *
-  * Installed by [[Sessions.builder]] via `withExtensions`; also usable
-  * standalone with `spark.sql.extensions=graft.GraftExtensions`.
+/** Engine extension point, installed by [[Sessions.builder]] via
+  * `withExtensions` (also usable standalone with
+  * `spark.sql.extensions=graft.GraftExtensions`). Registers:
+  *  - the [[graft.plans.TopKPerGroup]] planner strategy (per-group top-k
+  *    as a partial/final bounded-heap exec pair);
+  *  - one optimizer rule, [[graft.plans.TopKWindowRewrite]], which thins
+  *    a row_number window + rn <= k filter through TopKPerGroup;
+  *  - graft's custom Catalyst expressions and generator in the session's
+  *    FunctionRegistry, callable from the DataFrame API
+  *    (`call_function`) and `spark.sql`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    // whole-operator extension: per-group top-k planned as a
-    // partial/final bounded-heap exec pair (graft.plans.TopKPerGroup)
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerGroupStrategy)
-    // optimizer rule (on by default; spark.graft.topk.rewrite=false
-    // disables): thin a row_number-window + rn<=k filter through
-    // TopKPerGroup
     ext.injectOptimizerRule(_ => graft.plans.TopKWindowRewrite)
-    // opt-in optimizer rule (spark.graft.eageragg=true): eager
-    // aggregation — push a partial aggregate below an inner join
-    ext.injectOptimizerRule(_ => graft.plans.EagerAggregation)
     ext.injectFunction((
       new FunctionIdentifier("py_to_json"),
       new ExpressionInfo(

@@ -13,8 +13,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(outDir, sfDir, csv, rest @ _*) = args: @unchecked
     val suffix = rest.headOption.getOrElse("after")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Sessions.builder(s"local[$cpus]", cpus.toInt)
+    val spark = Sessions.local
       .config("spark.sql.adaptive.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -7,8 +7,7 @@ package graft
   */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = Sessions.local.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val time = args.contains("--time")
     val rest = args.filterNot(_ == "--time")

@@ -7,6 +7,14 @@ import org.apache.spark.sql.SparkSession
   * builder ever mutates conf as a side effect.
   */
 object Sessions {
+  /** Local-mode threads for the mains: `SPARK_GRAFT_CPUS` when set, else
+    * every processor the JVM sees. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .fold(Runtime.getRuntime.availableProcessors)(_.toInt)
+
+  /** [[builder]] at `local[cpus]`, one shuffle partition per thread. */
+  def local: SparkSession.Builder = builder(s"local[$cpus]", cpus)
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -31,6 +39,9 @@ object Sessions {
       // every sanctioned site, so it is excluded. The rule only ever
       // fires on foldable partition keys — which this codebase produces
       // solely through boundedWin, by design.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions")
+      .config("spark.sql.optimizer.excludedRules", ExcludedRules)
+
+  /** The optimizer rules every session excludes (see [[builder]]). */
+  val ExcludedRules =
+    "org.apache.spark.sql.catalyst.optimizer.EliminateWindowPartitions"
 }

@@ -44,10 +44,10 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * vs the window's full-partition sort buffer. On the final exec that
   * equals the output size; on the PARTIAL exec (pre-shuffle, every
   * partition can see every key) the map is additionally capped at
-  * `spark.graft.topk.maxPartialKeys` (default 2^20) tracked keys —
-  * past the cap, new-key rows stream through untrimmed and the final
-  * exec does all the trimming, trading shuffle volume for bounded
-  * executor memory on pathological cardinalities.
+  * [[TopKPerGroupExec.MaxPartialKeys]] tracked keys — past the cap,
+  * new-key rows stream through untrimmed and the final exec does all
+  * the trimming, trading shuffle volume for bounded executor memory on
+  * pathological cardinalities.
   *
   * Rows are kept as copied UnsafeRows; ordering is the codegen'd
   * [[LazilyGeneratedOrdering]] over the caller's SortOrder.
@@ -119,6 +119,12 @@ object TopKPerGroupStrategy
   }
 }
 
+object TopKPerGroupExec {
+  /** Distinct keys the PARTIAL exec tracks per partition (2^20) before
+    * new-key rows stream through to the final exec untrimmed. */
+  val MaxPartialKeys: Int = 1 << 20
+}
+
 case class TopKPerGroupExec(
     groupExprs: Seq[Expression],
     sortOrder: Seq[SortOrder],
@@ -140,18 +146,13 @@ case class TopKPerGroupExec(
     val ord = sortOrder
     val kk = k
     val isPartial = partial
-    // Memory guard (r9 advice): the heap map is k rows per DISTINCT KEY
-    // per partition. On the FINAL exec that's exactly the output size
-    // (keys are co-located post-shuffle, the map is never bigger than
-    // the result). But the PARTIAL exec runs before the shuffle, where
-    // every input partition can see nearly every key — on a
-    // high-cardinality PARTITION BY this unbounded map is an executor
-    // OOM where the window form's spillable sort succeeded. Partial
-    // thinning is purely an optimization (the final trims exactly), so
-    // past the cap, rows with NEW keys stream through untrimmed;
+    // Memory guard: the heap map holds k rows per DISTINCT KEY per
+    // partition. Post-shuffle (final) that is at most the output size,
+    // but the partial exec runs before the shuffle, where a partition can
+    // see nearly every key of a high-cardinality PARTITION BY. Partial
+    // thinning is only an optimization (the final trims exactly), so past
+    // MaxPartialKeys, rows with NEW keys pass through untrimmed;
     // already-tracked keys keep their heaps.
-    val maxPartialKeys = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.topk.maxPartialKeys", "1048576").toInt
     child.execute().mapPartitions({ iter =>
       val keyProj = UnsafeProjection.create(gExprs, schema)
       val rowOrd: Ordering[InternalRow] =
@@ -168,7 +169,8 @@ case class TopKPerGroupExec(
             if (h.size < kk) h.enqueue(row.copy())
             else if (rowOrd.lt(row, h.head)) { h.dequeue(); h.enqueue(row.copy()) }
             Iterator.empty
-          case None if isPartial && heaps.size >= maxPartialKeys =>
+          case None
+              if isPartial && heaps.size >= TopKPerGroupExec.MaxPartialKeys =>
             Iterator.single(row) // pass through; the final exec trims
           case None =>
             val h = new scala.collection.mutable.PriorityQueue[

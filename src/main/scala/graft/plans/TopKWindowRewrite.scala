@@ -7,39 +7,32 @@ import org.apache.spark.sql.catalyst.plans.logical.{
   Filter, LogicalPlan, Window}
 import org.apache.spark.sql.catalyst.rules.Rule
 
-/** Opt-in optimizer rule (the Rule[LogicalPlan] extension surface —
-  * graft's fourth Catalyst extension kind after scalar expressions, the
-  * generator, and the planner strategy): recognizes the ubiquitous
-  * per-group top-k idiom
+/** Optimizer rule: recognizes the per-group top-k idiom
   *
   *   Filter(rn <= k, Window(row_number() OVER (PARTITION BY g ORDER BY o)))
   *
   * and inserts [[TopKPerGroup]] BELOW the window, so the window only
-  * ranks the ≤ k·|groups| surviving rows instead of sorting the whole
-  * child. The Filter and Window stay in place — the rewrite is
-  * semantics-preserving by construction (TopKPerGroup keeps exactly the
-  * rows whose row_number can be ≤ k), the rn column remains available
-  * to downstream operators, and plans that don't match are untouched.
+  * ranks the <= k·|groups| surviving rows instead of sorting the whole
+  * child. The Filter and Window stay in place, so the rn column remains
+  * available downstream and plans that don't match are untouched.
   *
-  * ON by default since round 11 (`spark.graft.topk.rewrite=false`
-  * disables): TopKBench measured the bounded-heap thinning 2.4–4.9×
-  * faster than BOTH the plain window and Spark's native
-  * InferWindowGroupLimit at sf0.1 and 10× (its WindowGroupLimitExec
-  * filters on sorted partitions; our partial exec never sorts), and the
-  * full 256-query oracle battery hash-matches with the rule on. The
-  * documented trade stands: with a NON-total order, row_number already
-  * tie-breaks arbitrarily in Spark, and the rewrite can change WHICH
-  * arbitrary winner survives — same contract as TopKPerGroup.topK.
-  * Guards: single row_number window expression, same partition/order on
-  * the node, a bare rn-vs-literal predicate, and an
-  * already-rewritten child is never wrapped again (the rule runs in a
-  * fixed-point batch).
+  * Invariants:
+  *  - Exact only under a TOTAL order. TopKPerGroup keeps exactly the rows
+  *    whose row_number can be <= k; with ties in the ORDER BY,
+  *    row_number already picks an arbitrary winner, and the rewrite may
+  *    pick a different one (same contract as TopKPerGroup.topK). Append
+  *    a unique tie-break column where the winner matters.
+  *  - No global top-k: an empty PARTITION BY never matches (see apply).
+  *  - Idempotent: the rule runs in a fixed-point batch, so an
+  *    already-thinned child is never wrapped again (alreadyRewritten).
+  *  - Guards: a single row_number window expression and a bare
+  *    rn-vs-literal predicate; anything else is left alone.
+  *
+  * Always on. To plan the plain window instead (a reference plan in a
+  * test, say), append `graft.plans.TopKWindowRewrite` to
+  * `spark.sql.optimizer.excludedRules`.
   */
 object TopKWindowRewrite extends Rule[LogicalPlan] {
-
-  private def enabled: Boolean =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.topk.rewrite", "true") == "true"
 
   /** An already-rewritten child, seen through any Project chain another
     * fixed-point rule (ColumnPruning) may interpose between the Window
@@ -58,17 +51,14 @@ object TopKWindowRewrite extends Rule[LogicalPlan] {
 
   /** Spark 4's own InferWindowGroupLimit (a LATER optimizer batch than
     * injected rules) thins this shape natively when
-    * k ≤ spark.sql.optimizer.windowGroupLimitThreshold — but its
-    * WindowGroupLimitExec filters on SORTED partitions, while
-    * TopKPerGroup's partial exec keeps bounded heaps with no sort, which
-    * measures ~3× faster at sf0.1 (TopKBench; SCALING.md). So when this
-    * rule is enabled it claims the shape even inside native coverage:
-    * the native rule may still stack its WindowGroupLimit between the
-    * Window and TopKPerGroup, but over already-thinned ≤ k·|groups| rows
-    * that pass is measured at noise level (TopKBench mode `both`). */
+    * k <= spark.sql.optimizer.windowGroupLimitThreshold, but its
+    * WindowGroupLimitExec filters SORTED partitions while TopKPerGroup's
+    * partial exec keeps bounded heaps and never sorts (SCALING.md,
+    * "Per-group top-k"). So this rule claims the shape inside native
+    * coverage too; the native WindowGroupLimit may then stack between
+    * the Window and TopKPerGroup, over already-thinned rows. */
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformUp {
+    plan.transformUp {
       // part.nonEmpty: a GLOBAL top-k (empty PARTITION BY) must not
       // match — TopKPerGroup(Nil, …) would demand
       // ClusteredDistribution(Nil), which Spark rejects outright, and

@@ -80,8 +80,7 @@ class AnalyticsSpec extends AnyFunSuite {
     // prune and the per-basket pair expansion is C(50,2) = 1225 — the
     // diagnostic must report exactly that, because it is the quantity an
     // operator watches to catch super-linear pair growth early
-    val tmp = java.nio.file.Files
-      .createTempDirectory("q143guard").toString
+    val tmp = TestSpark.tempDir("q143guard").toString
     val rows = for (o <- 1L to 3L; p <- 1L to 50L) yield (o, p)
     rows.toDF("l_orderkey", "l_partkey")
       .write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")

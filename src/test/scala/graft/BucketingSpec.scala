@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,7 +13,7 @@ class BucketingSpec extends AnyFunSuite {
 
   test("bucketed join plans without a shuffle exchange") {
     val d = "/root/testdata/sf0.001"
-    val wh = Files.createTempDirectory("graft-warehouse").toString
+    val wh = TestSpark.tempDir("graft-warehouse").toString
     spark.sql("DROP TABLE IF EXISTS li_bucketed")
     spark.sql("DROP TABLE IF EXISTS ord_bucketed")
 
@@ -63,7 +62,7 @@ class BucketingSpec extends AnyFunSuite {
     // per-domain query read ONLY that domain's files — partition pruning
     // at planning time, before any I/O. At 100 TB this is the difference
     // between scanning one domain and scanning the lake.
-    val dir = Files.createTempDirectory("graft-part").toString + "/docs"
+    val dir = TestSpark.tempDir("graft-part").toString + "/docs"
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .write.partitionBy("source").parquet(dir)
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -15,7 +14,7 @@ class CorpusBuildSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   private def freshOut() =
-    Files.createTempDirectory("graft-corpusbuild-spec").toString + "/corpus"
+    TestSpark.tempDir("graft-corpusbuild-spec").toString + "/corpus"
 
   private lazy val out1 = freshOut()
   private lazy val cert1 = graft.sink.CorpusBuild

@@ -20,7 +20,7 @@ class CorpusPublishSpec extends AnyFunSuite {
     .select(col("doc_id"), col("text"), col("lang"), col("source"))
 
   private lazy val out = {
-    val d = Files.createTempDirectory("graft-publish").toString
+    val d = TestSpark.tempDir("graft-publish").toString
     CorpusPublish.publish(docs, d, "source", "doc_id", maxPerFile)
     d
   }
@@ -91,8 +91,8 @@ class CorpusPublishSpec extends AnyFunSuite {
   }
 
   test("streaming publish certifies identically and survives batch replay") {
-    val sdir = Files.createTempDirectory("graft-pub-stream-in").toString
-    val sout = Files.createTempDirectory("graft-pub-stream-out").toString
+    val sdir = TestSpark.tempDir("graft-pub-stream-in").toString
+    val sout = TestSpark.tempDir("graft-pub-stream-out").toString
     // three chunks → three microbatches (maxFilesPerTrigger=1)
     for ((lo, hi, i) <- Seq((0L, 150L, 0), (150L, 300L, 1), (300L, 600L, 2))) {
       docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
@@ -106,7 +106,7 @@ class CorpusPublishSpec extends AnyFunSuite {
       .option("maxFilesPerTrigger", "1")
       .parquet(sdir)
     val q = StreamOps.publishStream(stream, sout,
-      Files.createTempDirectory("graft-ckpt-pub").toString, maxPerFile)
+      TestSpark.tempDir("graft-ckpt-pub").toString, maxPerFile)
     q.awaitTermination()
 
     // the files certify to the same per-source manifest as batch publish
@@ -153,9 +153,9 @@ class CorpusPublishSpec extends AnyFunSuite {
     // restarts. The engine replays batch 0 — publishBatch must no-op on
     // the matching marker — then processes the new batches; the published
     // corpus must certify identically to a one-shot batch publish.
-    val sdir = Files.createTempDirectory("graft-pub-restart-in").toString
-    val sout = Files.createTempDirectory("graft-pub-restart-out").toString
-    val ckpt = Files.createTempDirectory("graft-pub-restart-ckpt").toString
+    val sdir = TestSpark.tempDir("graft-pub-restart-in").toString
+    val sout = TestSpark.tempDir("graft-pub-restart-out").toString
+    val ckpt = TestSpark.tempDir("graft-pub-restart-ckpt").toString
     def addChunk(lo: Long, hi: Long, i: Int): Unit = {
       docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
         .coalesce(1).write.parquet(s"$sdir/c$i")
@@ -197,7 +197,7 @@ class CorpusPublishSpec extends AnyFunSuite {
     // probe, replay no-op, collision throw, marker publish) through a
     // scheme-qualified URI that java.io cannot resolve as a local path.
     import spark.implicits._
-    val local = Files.createTempDirectory("graft-pub-hadoopfs")
+    val local = TestSpark.tempDir("graft-pub-hadoopfs")
     val uri = "file://" + local.toString
     def batchOf(rows: Seq[(Long, String)]) =
       rows.toDF("doc_id", "text").withColumn("source", lit("s0"))
@@ -237,7 +237,7 @@ class CorpusPublishSpec extends AnyFunSuite {
     // delivering the second batch at the first's id must THROW, not
     // no-op as a "committed replay".
     import spark.implicits._
-    val d2 = Files.createTempDirectory("graft-pub-xor").toString
+    val d2 = TestSpark.tempDir("graft-pub-xor").toString
     def batchOf(rows: Seq[(Long, String)]) =
       rows.toDF("doc_id", "text").withColumn("source", lit("s0"))
     graft.sink.CorpusPublish.publishBatch(
@@ -252,7 +252,7 @@ class CorpusPublishSpec extends AnyFunSuite {
   }
 
   test("global-sort publish: disjoint ordered ranges, complete, in-file sorted") {
-    val d = Files.createTempDirectory("graft-gsort").toString + "/sorted"
+    val d = TestSpark.tempDir("graft-gsort").toString + "/sorted"
     val m = CorpusPublish.publishGlobalSorted(docs, d, "doc_id", 8)
     // dense unique key → every sampled range lands rows → all 8 files
     assert(m.size == 8)

@@ -65,7 +65,7 @@ class EtlKitSpec extends AnyFunSuite {
     // projected fixtures (ratings: userId,movieId,rating,timestamp;
     // credits: cast,crew,id); rewrite the fixtures in those layouts and
     // require the same rating averages and credits tables
-    val tmp = java.nio.file.Files.createTempDirectory("graft-kaggle-layout")
+    val tmp = TestSpark.tempDir("graft-kaggle-layout")
     try {
       def rewrite(fixture: String, schema: org.apache.spark.sql.types.StructType,
           header: Seq[String], extra: Map[String, String]): String = {

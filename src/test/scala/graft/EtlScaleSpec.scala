@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.{CreditsPipeline, MoviesPipeline}
@@ -56,7 +55,7 @@ class EtlScaleSpec extends AnyFunSuite {
         lit("0").as("revenue"),
         lit("95.0").as("runtime"),
         substring(col("text"), 1, 60).as("overview"))
-    val dir = Files.createTempDirectory("graft-etl-scale").toString + "/movies"
+    val dir = TestSpark.tempDir("graft-etl-scale").toString + "/movies"
     rows.coalesce(1).write.option("header", "true").mode("overwrite").csv(dir)
     dir
   }
@@ -64,7 +63,7 @@ class EtlScaleSpec extends AnyFunSuite {
   test("pipeline invariants hold on a 5000-row generated corpus") {
     import spark.implicits._
     val ratingsDir = {
-      val d = Files.createTempDirectory("graft-etl-scale").toString + "/ratings"
+      val d = TestSpark.tempDir("graft-etl-scale").toString + "/ratings"
       spark.range(2000)
         .select((col("id") % 3000).cast("string").as("movieId"),
           ((col("id") % 9 + 1) * lit(0.5)).cast("string").as("rating"))
@@ -127,7 +126,7 @@ class EtlScaleSpec extends AnyFunSuite {
       concat(lit("[{'id': "), (col("id") % 200 + 5000).cast("string"),
         lit(", 'name': 'NoJob "), (col("id") % 200).cast("string"),
         lit("'}]")).as("crew"))
-    val dir = Files.createTempDirectory("graft-credits-scale").toString + "/credits"
+    val dir = TestSpark.tempDir("graft-credits-scale").toString + "/credits"
     // full row FIRST, its empty duplicate SECOND (file order = scan order)
     full.withColumn("ord", lit(0))
       .unionByName(emptyDup.withColumn("ord", lit(1)))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,7 +15,7 @@ class FormatsSpec extends AnyFunSuite {
 
   test("ORC round-trips documents and pushes filters into the scan") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val dir = Files.createTempDirectory("graft-orc").toString + "/docs"
+    val dir = TestSpark.tempDir("graft-orc").toString + "/docs"
     docs.write.mode("overwrite").orc(dir)
 
     val back = spark.read.orc(dir)
@@ -64,7 +63,7 @@ class FormatsSpec extends AnyFunSuite {
     // corrupt-record column so a torn line degrades to one NULL row
     // instead of failing the 100 TB job.
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val dir = Files.createTempDirectory("graft-json").toString + "/docs"
+    val dir = TestSpark.tempDir("graft-json").toString + "/docs"
     docs.write.mode("overwrite").json(dir)
 
     val back = spark.read

@@ -13,8 +13,7 @@ class HammingJoinSpec extends AnyFunSuite {
 
   test("hot blocks dropped, sub-cap near-pair survives") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ham").toString
+    val dir = TestSpark.tempDir("graft-ham").toString
     val boiler = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val b1 = "red green blue yellow purple orange pink cyan teal maroon"
     val b2 = "red green blue yellow purple orange pink cyan teal magenta"

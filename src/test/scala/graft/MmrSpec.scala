@@ -26,8 +26,7 @@ class MmrSpec extends AnyFunSuite {
     // Step 3 scores: v2 = 7(0.89) − 3(0.9997) ≈ 3.23 loses to
     // v4 = 7(0.85) − 3(0.85) = 3.40 — the escape a relevance-only
     // ranker (v0, v1, v2, v3, …) never makes.
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-mmr").toString
+    val dir = TestSpark.tempDir("graft-mmr").toString
     def v(xs: Double*) = xs.map(_.toFloat).toArray
     val rows = Seq(
       (0L, v(1.0, 0.0, 0.0, 0.0), 0),

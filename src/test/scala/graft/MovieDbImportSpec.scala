@@ -12,7 +12,7 @@ class MovieDbImportSpec extends AnyFunSuite {
   private val url = "jdbc:derby:memory:graftImport;create=true"
 
   test("run() imports a dataset directory end-to-end") {
-    val dir = Files.createTempDirectory("graft-dataset")
+    val dir = TestSpark.tempDir("graft-dataset")
     for (f <- Seq("movies_metadata.csv", "credits.csv", "keywords.csv",
         "ratings.csv"))
       Files.copy(Paths.get(TestSpark.fixture(f)), dir.resolve(f),
@@ -43,7 +43,7 @@ class MovieDbImportSpec extends AnyFunSuite {
 
   test("re-running the import is idempotent (drop-recreate-append)") {
     val url2 = "jdbc:derby:memory:graftImportTwice;create=true"
-    val dir = Files.createTempDirectory("graft-dataset-rerun")
+    val dir = TestSpark.tempDir("graft-dataset-rerun")
     for (f <- Seq("movies_metadata.csv", "credits.csv", "keywords.csv",
         "ratings.csv"))
       Files.copy(Paths.get(TestSpark.fixture(f)), dir.resolve(f),

@@ -575,12 +575,6 @@ class PlanShapeSpec extends AnyFunSuite {
     //     -z "plan signature"' (the generator IS this test, so generator
     // and checker can never disagree on session config).
     val goldenPath = "scripts/plan_goldens.json"
-    // pin the rewrite flags to their shipped defaults: the shared test
-    // session is mutated by other suites (TopKPerGroupSpec/EagerAggSpec
-    // toggle these), and signatures must reflect the DEFAULT engine —
-    // the full-suite run is otherwise suite-order-dependent (observed:
-    // topkgrp rows decayed to plain windows when this test ran after a
-    // suite that left the rewrite off)
     // AQE off for signature computation (r14): goldens are ALSO diffed
     // in-sweep by graft.ScanCount (the pre-commit path), whose session
     // disables AQE so plans are static. Under AQE the initial plan hides
@@ -589,23 +583,16 @@ class PlanShapeSpec extends AnyFunSuite {
     // AQE-off is the canonical form, consistent with the scan gate's
     // frozen caps (q146: AQE-on signature read scan:documents=5, the
     // gate and reality read 3).
-    val pinnedConfs = Seq("spark.graft.topk.rewrite" -> "true",
-      "spark.graft.eageragg" -> "false",
-      "spark.sql.adaptive.enabled" -> "false")
-    val saved = pinnedConfs.map { case (k, _) =>
-      k -> spark.conf.getOption(k)
-    }
-    pinnedConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+    val aqe = "spark.sql.adaptive.enabled"
+    val savedAqe = spark.conf.getOption(aqe)
+    spark.conf.set(aqe, "false")
     val live =
       try SparkEntry.queries.keys.toSeq.sorted.map { n =>
         // fresh cache per query: a cross-query cache hit would hide a
         // scan the standalone query pays
         spark.catalog.clearCache()
         n -> ScanCount.signature(ScanCount.queryPlans(spark, n, dir))
-      } finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
+      } finally savedAqe.fold(spark.conf.unset(aqe))(spark.conf.set(aqe, _))
     if (sys.env.contains("GRAFT_UPDATE_GOLDENS")) {
       val w = new java.io.PrintWriter(goldenPath, "UTF-8")
       try {

@@ -365,7 +365,7 @@ class QualityGraphOpsSpec extends AnyFunSuite {
 
   test("q134: each gate fires on its planted violation, composite ANDs") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("gopher").toString
+    val tmp = TestSpark.tempDir("gopher").toString
     val w4 = (1 to 48).map(i => f"w$i%03d") // 4-char distinct tokens
     val docs = Seq(
       // 50 tokens, 4-char words, two stop words, no repetition: keeps
@@ -577,7 +577,7 @@ class QualityGraphOpsSpec extends AnyFunSuite {
 
   test("q136 matches a scalar KS computation on planted distributions") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("ks").toString
+    val tmp = TestSpark.tempDir("ks").toString
     // click uniform-ish low, purchase shifted high; shared values (ties
     // across sides), duplicates within a side, and values straddling the
     // ⌊value⌋ bucket boundary the distributed CDF partitions on

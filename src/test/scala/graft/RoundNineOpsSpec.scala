@@ -81,7 +81,7 @@ class RoundNineOpsSpec extends AnyFunSuite {
 
   test("q210 flags a planted mid-series rate shift at the shift hour") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("q210").toString
+    val tmp = TestSpark.tempDir("q210").toString
     // 10 quiet hours (1 event/h) then 10 loud hours (5 events/h):
     // |S_k| = |n·cum − k·total| peaks exactly at the last quiet hour
     val rows = (0 until 10).flatMap(h => Seq(h.toLong)) ++

@@ -125,7 +125,7 @@ class RoundTwelveOpsSpec extends AnyFunSuite {
     // "a b c e" → {abc, bce}, repeated so abc×3, bcd×2, bce×1 —
     // f1 = f2 = f3 = 1, D = 3, bias-corrected chao1 = 3 + 1·0/(2·2) = 3,
     // Good–Turing r* : r=1 → 2·f2/f1 = 2, r=2 → 3·f3/f2 = 3
-    val tmp = java.nio.file.Files.createTempDirectory("q275").toString
+    val tmp = TestSpark.tempDir("q275").toString
     Seq((1L, "a b c d"), (2L, "a b c e"), (3L, "a b c d"))
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s"))

@@ -23,8 +23,7 @@ object ScaleProbe {
   private def skewProbe(): Unit = {
     val base = "/root/testdata/sf0.1"
     val out = "/tmp/graft-skew-90"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = Sessions.local.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (!new java.io.File(s"$out/documents.parquet").exists()) {
       val docs = spark.read.parquet(s"$base/documents.parquet")
@@ -113,8 +112,7 @@ object ScaleProbe {
     val queries =
       if (args.length > 1) args(1).split(",").toSeq.map(_.trim)
       else defaults
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Sessions.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val spark = Sessions.local.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     if (!new java.io.File(s"$out/documents.parquet").exists()) {

@@ -57,9 +57,9 @@ class StreamCorpusIngestSpec extends AnyFunSuite {
     docs.unionByName(leaks).unionByName(reposts))
 
   private lazy val streamDir: String = {
-    val dir = Files.createTempDirectory("graft-ingest-stream").toString
+    val dir = TestSpark.tempDir("graft-ingest-stream").toString
     def write(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft-chunk").toString
+      val tmp = TestSpark.tempDir("graft-chunk").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = Files.list(Paths.get(tmp)).toArray.map(_.asInstanceOf[Path])
         .find(_.toString.endsWith(".parquet")).get
@@ -84,7 +84,7 @@ class StreamCorpusIngestSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("t_ingest")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-ingest").toString)
+        TestSpark.tempDir("graft-ckpt-ingest").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -135,20 +135,20 @@ class StreamCorpusIngestSpec extends AnyFunSuite {
     // rebuilding the corpus in one batch pass over the same input. This
     // extends CorpusPublishSpec's raw-row restart case to gates →
     // decontamination → watermark dedup → publish.
-    val rebuildOut = Files.createTempDirectory("graft-ingest-rebuild")
+    val rebuildOut = TestSpark.tempDir("graft-ingest-rebuild")
       .toString + "/corpus"
     val batchRows = StreamOps.ingestHits(batchInput, evalDocs)
       .dropDuplicates("simhash")
     graft.sink.CorpusPublish.publish(batchRows, rebuildOut, "source",
       "doc_id", 1000)
 
-    val sdir = Files.createTempDirectory("graft-ingest-restart-in").toString
-    val sout = Files.createTempDirectory("graft-ingest-restart-out")
+    val sdir = TestSpark.tempDir("graft-ingest-restart-in").toString
+    val sout = TestSpark.tempDir("graft-ingest-restart-out")
       .toString + "/corpus"
-    val ckpt = Files.createTempDirectory("graft-ingest-restart-ckpt")
+    val ckpt = TestSpark.tempDir("graft-ingest-restart-ckpt")
       .toString
     def land(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft-chunk").toString
+      val tmp = TestSpark.tempDir("graft-chunk").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = Files.list(Paths.get(tmp)).toArray.map(_.asInstanceOf[Path])
         .find(_.toString.endsWith(".parquet")).get
@@ -190,9 +190,9 @@ class StreamCorpusIngestSpec extends AnyFunSuite {
   }
 
   test("exactly-once publish lands exactly the survivors") {
-    val out = Files.createTempDirectory("graft-ingest-pub").toString + "/corpus"
+    val out = TestSpark.tempDir("graft-ingest-pub").toString + "/corpus"
     val q = StreamOps.ingestCorpus(readChunks(), evalDocs, out,
-      Files.createTempDirectory("graft-ckpt-ingest-pub").toString)
+      TestSpark.tempDir("graft-ckpt-ingest-pub").toString)
     q.awaitTermination()
     val published = spark.read.parquet(out)
     // the published multiset is signature-identical to the survivor set

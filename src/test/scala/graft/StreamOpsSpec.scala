@@ -42,9 +42,9 @@ class StreamOpsSpec extends AnyFunSuite {
       lit(SentinelUser).as("user_id"), lit("sentinel").as("event_type"),
       lit(0.0).as("value"), lit("{}").as("props"))
 
-    val dir = Files.createTempDirectory("graft-stream").toString
+    val dir = TestSpark.tempDir("graft-stream").toString
     def writeChunk(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft-chunk").toString
+      val tmp = TestSpark.tempDir("graft-chunk").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = Files.list(Paths.get(tmp)).toArray.map(_.asInstanceOf[Path])
         .find(_.toString.endsWith(".parquet")).get
@@ -66,7 +66,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName(name)
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory(s"graft-ckpt-$name").toString)
+        TestSpark.tempDir(s"graft-ckpt-$name").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -211,9 +211,9 @@ class StreamOpsSpec extends AnyFunSuite {
     val events = OpsKit.events(spark, "/root/testdata/sf0.001")
       .select("event_id", "ts", "user_id", "event_type", "value", "props")
       .limit(500)
-    val dir = Files.createTempDirectory("graft-dedup-stream").toString
+    val dir = TestSpark.tempDir("graft-dedup-stream").toString
     def write(name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft-chunk").toString
+      val tmp = TestSpark.tempDir("graft-chunk").toString
       events.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = Files.list(Paths.get(tmp)).toArray.map(_.asInstanceOf[Path])
         .find(_.toString.endsWith(".parquet")).get
@@ -227,7 +227,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("t_dedup")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-dedup").toString)
+        TestSpark.tempDir("graft-ckpt-dedup").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -264,9 +264,9 @@ class StreamOpsSpec extends AnyFunSuite {
       docs.select((col("doc_id") + 100000).as("doc_id"),
         LlmKit.dropFirstToken(col("text")).as("text")), 60000)
 
-    val dir = Files.createTempDirectory("graft-neardup-stream").toString
+    val dir = TestSpark.tempDir("graft-neardup-stream").toString
     def write(df: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft-chunk").toString
+      val tmp = TestSpark.tempDir("graft-chunk").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = Files.list(Paths.get(tmp)).toArray.map(_.asInstanceOf[Path])
         .find(_.toString.endsWith(".parquet")).get
@@ -285,7 +285,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("t_neardup")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-neardup").toString)
+        TestSpark.tempDir("graft-ckpt-neardup").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -326,9 +326,9 @@ class StreamOpsSpec extends AnyFunSuite {
       docs.select((col("doc_id") + 100000).as("doc_id"),
         LlmKit.dropFirstToken(col("text")).as("text")), 0)
 
-    val dir = Files.createTempDirectory("graft-cluster-stream").toString
+    val dir = TestSpark.tempDir("graft-cluster-stream").toString
     def write(df: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft-chunk").toString
+      val tmp = TestSpark.tempDir("graft-chunk").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = Files.list(Paths.get(tmp)).toArray.map(_.asInstanceOf[Path])
         .find(_.toString.endsWith(".parquet")).get
@@ -354,7 +354,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("t_cluster")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-cluster").toString)
+        TestSpark.tempDir("graft-ckpt-cluster").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -396,9 +396,9 @@ class StreamOpsSpec extends AnyFunSuite {
       lit(-1L).as("query_id"),
       typedLit(Seq.fill(64)(0.1f)).as("embedding"))
 
-    val dir = Files.createTempDirectory("graft-ann-stream").toString
+    val dir = TestSpark.tempDir("graft-ann-stream").toString
     def write(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft-chunk").toString
+      val tmp = TestSpark.tempDir("graft-chunk").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = Files.list(Paths.get(tmp)).toArray.map(_.asInstanceOf[Path])
         .find(_.toString.endsWith(".parquet")).get
@@ -418,7 +418,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("t_ann")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-ann").toString)
+        TestSpark.tempDir("graft-ckpt-ann").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -447,9 +447,9 @@ class StreamOpsSpec extends AnyFunSuite {
     val leaks = withTs(eval_.select((col("doc_id") + 200000).as("doc_id"),
       LlmKit.dropFirstToken(col("text")).as("text")), 60000)
 
-    val dir = Files.createTempDirectory("graft-contam-stream").toString
+    val dir = TestSpark.tempDir("graft-contam-stream").toString
     def write(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft-chunk").toString
+      val tmp = TestSpark.tempDir("graft-chunk").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = Files.list(Paths.get(tmp)).toArray.map(_.asInstanceOf[Path])
         .find(_.toString.endsWith(".parquet")).get
@@ -468,7 +468,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("t_contam")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-contam").toString)
+        TestSpark.tempDir("graft-ckpt-contam").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -500,7 +500,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val url = "jdbc:derby:memory:graftStream;create=true"
     val q = StreamOps.jdbcSink(
       StreamOps.readEvents(spark, streamDir), url, "events_ingest",
-      Files.createTempDirectory("graft-ckpt-jdbc").toString)
+      TestSpark.tempDir("graft-ckpt-jdbc").toString)
     q.awaitTermination()
     val con = java.sql.DriverManager.getConnection(url)
     try {
@@ -554,9 +554,9 @@ class StreamOpsSpec extends AnyFunSuite {
     def withTs(df: DataFrame) = df.select(
       timestamp_seconds(lit(1700000000L) + col("doc_id") * 60).as("ts"),
       col("doc_id"), col("text"))
-    val dir = Files.createTempDirectory("graft-drift-stream").toString
+    val dir = TestSpark.tempDir("graft-drift-stream").toString
     def write(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft-chunk").toString
+      val tmp = TestSpark.tempDir("graft-chunk").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = Files.list(Paths.get(tmp)).toArray.map(_.asInstanceOf[Path])
         .find(_.toString.endsWith(".parquet")).get
@@ -581,7 +581,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("t_drift")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-drift").toString)
+        TestSpark.tempDir("graft-ckpt-drift").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -617,9 +617,9 @@ class StreamOpsSpec extends AnyFunSuite {
         r.getBoolean(4), r.getBoolean(5), r.getBoolean(6))).toMap
     assert(foldGates == q134)
 
-    val dir = Files.createTempDirectory("graft-qg-stream").toString
+    val dir = TestSpark.tempDir("graft-qg-stream").toString
     def write(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft-chunk").toString
+      val tmp = TestSpark.tempDir("graft-chunk").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = Files.list(Paths.get(tmp)).toArray.map(_.asInstanceOf[Path])
         .find(_.toString.endsWith(".parquet")).get
@@ -642,7 +642,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("t_qgate")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-qgate").toString)
+        TestSpark.tempDir("graft-ckpt-qgate").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -665,9 +665,9 @@ class StreamOpsSpec extends AnyFunSuite {
       col("doc_id"), col("source"))
     val targets = graft.sink.CorpusBuild.doremiTargets(spark, sfDir)
 
-    val dir = Files.createTempDirectory("graft-mix-stream").toString
+    val dir = TestSpark.tempDir("graft-mix-stream").toString
     def write(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft-chunk").toString
+      val tmp = TestSpark.tempDir("graft-chunk").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = Files.list(Paths.get(tmp)).toArray.map(_.asInstanceOf[Path])
         .find(_.toString.endsWith(".parquet")).get
@@ -693,7 +693,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("t_mix")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-mix").toString)
+        TestSpark.tempDir("graft-ckpt-mix").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -729,7 +729,7 @@ class StreamOpsSpec extends AnyFunSuite {
 
   private def writeChunk(dir: String)(df: DataFrame, name: String,
       mtime: Long): Unit = {
-    val tmp = Files.createTempDirectory("graft-chunk").toString
+    val tmp = TestSpark.tempDir("graft-chunk").toString
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = Files.list(Paths.get(tmp)).toArray.map(_.asInstanceOf[Path])
       .find(_.toString.endsWith(".parquet")).get
@@ -747,7 +747,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .toDF().writeStream.format("memory").queryName(tableName)
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-admit").toString)
+        TestSpark.tempDir("graft-ckpt-admit").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -760,7 +760,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val sfDir = "/root/testdata/sf0.001"
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val targets = graft.sink.CorpusBuild.doremiTargets(spark, sfDir)
-    val dir = Files.createTempDirectory("graft-admit-stream").toString
+    val dir = TestSpark.tempDir("graft-admit-stream").toString
     writeChunk(dir)(floodedDocs(docs), "c0.parquet",
       System.currentTimeMillis() - 600000)
     runAdmission(dir, targets, "t_admit1")
@@ -815,7 +815,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val targets = graft.sink.CorpusBuild.doremiTargets(spark, sfDir)
     val wMap = targets.toMap
-    val dir = Files.createTempDirectory("graft-admit-flood").toString
+    val dir = TestSpark.tempDir("graft-admit-flood").toString
     val t0 = System.currentTimeMillis() - 600000
     writeChunk(dir)(floodedDocs(docs.filter(col("doc_id") % 2 === 0)),
       "c0.parquet", t0)
@@ -879,7 +879,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .toDF().writeStream.format("memory").queryName(tableName)
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-defer").toString)
+        TestSpark.tempDir("graft-ckpt-defer").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -964,7 +964,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .toDF().writeStream.format("memory").queryName(tableName)
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-defer2").toString)
+        TestSpark.tempDir("graft-ckpt-defer2").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -1034,7 +1034,7 @@ class StreamOpsSpec extends AnyFunSuite {
       (new java.sql.Timestamp((w0 + 3 * 3600 + 10) * 1000), 5L, "s0",
         10L))
       .toDF("ts", "doc_id", "source", "n_toks")
-    val dir = Files.createTempDirectory("graft-defer2-fix").toString
+    val dir = TestSpark.tempDir("graft-defer2-fix").toString
     writeChunk(dir)(rows, "c0.parquet", System.currentTimeMillis() - 600000)
     runDefer2Admission(dir, Seq("s0" -> 1.0), "t_defer2hop_fix",
       windowTokens = 100.0)
@@ -1065,7 +1065,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val sfDir = "/root/testdata/sf0.01"
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val targets = graft.sink.CorpusBuild.doremiTargets(spark, sfDir)
-    val dir = Files.createTempDirectory("graft-defer2-stream").toString
+    val dir = TestSpark.tempDir("graft-defer2-stream").toString
     writeChunk(dir)(floodedDocs(docs), "c0.parquet",
       System.currentTimeMillis() - 600000)
     runDefer2Admission(dir, targets, "t_defer2hop")
@@ -1144,7 +1144,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val sfDir = "/root/testdata/sf0.01"
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val targets = graft.sink.CorpusBuild.doremiTargets(spark, sfDir)
-    val dir = Files.createTempDirectory("graft-defer-stream").toString
+    val dir = TestSpark.tempDir("graft-defer-stream").toString
     writeChunk(dir)(floodedDocs(docs), "c0.parquet",
       System.currentTimeMillis() - 600000)
     runDeferAdmission(dir, targets, "t_defer1")
@@ -1236,7 +1236,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val targets = graft.sink.CorpusBuild.doremiTargets(spark, sfDir)
     val cut = 1699999200L + 4 * 3600 // start of window 4
-    val dir = Files.createTempDirectory("graft-defer-2b").toString
+    val dir = TestSpark.tempDir("graft-defer-2b").toString
     val t0 = System.currentTimeMillis() - 600000
     writeChunk(dir)(floodedDocs(docs)
       .filter(unix_timestamp(col("ts")) < cut), "c0.parquet", t0)
@@ -1281,17 +1281,17 @@ class StreamOpsSpec extends AnyFunSuite {
       col("doc_id"), col("text"),
       when(pmod(col("doc_id"), lit(3)) === 0, lit("src0"))
         .otherwise(col("source")).as("source"))
-    val dir = Files.createTempDirectory("graft-thr-ingest").toString
+    val dir = TestSpark.tempDir("graft-thr-ingest").toString
     writeChunk(dir)(floodedFull(docs), "c0.parquet",
       System.currentTimeMillis() - 600000)
     val stream = spark.readStream
       .schema("ts TIMESTAMP, doc_id LONG, text STRING, source STRING")
       .parquet(dir)
     val stageDir =
-      Files.createTempDirectory("graft-thr-stage").toString + "/stage"
+      TestSpark.tempDir("graft-thr-stage").toString + "/stage"
     val outDir =
-      Files.createTempDirectory("graft-thr-out").toString + "/out"
-    val ckpt = Files.createTempDirectory("graft-thr-ckpt").toString
+      TestSpark.tempDir("graft-thr-out").toString + "/out"
+    val ckpt = TestSpark.tempDir("graft-thr-ckpt").toString
     StreamOps.throttledIngestCorpus(stream, evalDocs, targets,
       stageDir, outDir, ckpt)
 
@@ -1348,7 +1348,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val sfDir = "/root/testdata/sf0.001"
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val targets = graft.sink.CorpusBuild.doremiTargets(spark, sfDir)
-    val dir = Files.createTempDirectory("graft-admit-ttl").toString
+    val dir = TestSpark.tempDir("graft-admit-ttl").toString
     val t0 = System.currentTimeMillis() - 600000
     writeChunk(dir)(floodedDocs(docs.filter(col("doc_id") < 250)),
       "c0.parquet", t0)
@@ -1388,9 +1388,9 @@ class StreamOpsSpec extends AnyFunSuite {
       lit(-1L).as("vec_id"),
       typedLit(Seq.fill(64)(0.1f)).as("embedding"))
 
-    val dir = Files.createTempDirectory("graft-km-stream").toString
+    val dir = TestSpark.tempDir("graft-km-stream").toString
     def write(df: DataFrame, name: String, mtime: Long): Unit = {
-      val tmp = Files.createTempDirectory("graft-chunk").toString
+      val tmp = TestSpark.tempDir("graft-chunk").toString
       df.coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = Files.list(Paths.get(tmp)).toArray.map(_.asInstanceOf[Path])
         .find(_.toString.endsWith(".parquet")).get
@@ -1411,7 +1411,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .writeStream.format("memory").queryName("t_km")
       .outputMode("append")
       .option("checkpointLocation",
-        Files.createTempDirectory("graft-ckpt-km").toString)
+        TestSpark.tempDir("graft-ckpt-km").toString)
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()

@@ -11,6 +11,14 @@ object TestSpark {
     s
   }
 
+  /** A new directory under `java.io.tmpdir`, deleted when the test JVM
+    * exits. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val p = java.nio.file.Files.createTempDirectory(prefix)
+    graft.ops.OpsKit.reapOnExit(p)
+    p
+  }
+
   def fixture(name: String): String =
     getClass.getResource(s"/fixtures/$name").getPath
 }

@@ -64,11 +64,26 @@ class TopKPerGroupSpec extends AnyFunSuite {
     assert(rows == want)
   }
 
+  /** Runs `body` with TopKWindowRewrite appended to the session's
+    * `spark.sql.optimizer.excludedRules`, then restores the old value
+    * (which already excludes rules of its own, see Sessions.builder). */
+  private def withoutRewrite[T](body: => T): T = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key,
+      s"$saved,${graft.plans.TopKWindowRewrite.ruleName}")
+    try body finally spark.conf.set(key, saved)
+  }
+
+  test("extensions inject exactly one optimizer rule: TopKWindowRewrite") {
+    val graftRules = spark.sessionState.optimizer.batches
+      .flatMap(_.rules).map(_.ruleName).filter(_.startsWith("graft."))
+    assert(graftRules.distinct == Seq("graft.plans.TopKWindowRewrite"),
+      graftRules)
+  }
+
   test("rewrite rule: ON by default, off switch restores the plain window") {
-    def windowPlan() = windowForm(5)
-    // default since r11: the rewrite thins the window (TopKBench: the
-    // bounded-heap path beats native WindowGroupLimit 2.4-4.9×)
-    val on = windowPlan()
+    val on = windowForm(5)
     val opt = on.queryExecution.optimizedPlan.toString
     assert(opt.contains("TopKPerGroup"), opt)
     // the Window survives ABOVE the thinned child (rn still usable)
@@ -77,25 +92,26 @@ class TopKPerGroupSpec extends AnyFunSuite {
       phys)
     val want = on.collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted
-    spark.conf.set("spark.graft.topk.rewrite", "false")
-    try {
-      val off = windowPlan()
+    withoutRewrite {
+      val off = windowForm(5)
       assert(!off.queryExecution.optimizedPlan.toString
         .contains("TopKPerGroup"))
       val got = off.collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).sorted
-      // the off switch changes the plan, never the rows (total order here)
+      // excluding the rule changes the plan, never the rows (total order)
       assert(got.toSeq == want.toSeq)
-    } finally spark.conf.set("spark.graft.topk.rewrite", "true")
+    }
+    // the shared session is left as Sessions.builder made it, so later
+    // suites plan with the shipped rule set
+    assert(spark.conf.get("spark.sql.optimizer.excludedRules") ==
+      Sessions.ExcludedRules)
   }
 
   test("rewrite rule: claims the shape inside native coverage; stacking is benign") {
-    // r11 policy reversal of the r9 "defer to native" advice, measured:
-    // WindowGroupLimitExec filters on SORTED partitions, TopKPerGroup's
-    // partial heaps never sort — so the rule claims k ≤ threshold shapes
-    // too. The native rule (a LATER batch) may stack its
-    // WindowGroupLimit over the already-thinned child; that pass is
-    // noise-level (TopKBench `both`) and must not break row parity.
+    // WindowGroupLimitExec filters SORTED partitions while TopKPerGroup's
+    // partial heaps never sort, so the rule claims k <= threshold shapes
+    // too. The native rule (a LATER batch) may stack its WindowGroupLimit
+    // over the already-thinned child; that must not break row parity.
     val df = windowForm(5) // default threshold 1000 covers k=5
     val opt = df.queryExecution.optimizedPlan.toString
     assert(opt.contains("TopKPerGroup"), opt)
@@ -108,40 +124,34 @@ class TopKPerGroupSpec extends AnyFunSuite {
 
   test("rewrite rule: a GLOBAL top-k (empty partition) must not match") {
     import org.apache.spark.sql.expressions.Window
-    spark.conf.set("spark.graft.topk.rewrite", "true")
-    try {
-      // ClusteredDistribution(Nil) would be rejected at planning — the
-      // rule must leave the global form to TakeOrderedAndProject.
-      // WAIVER: this is the one sanctioned "No Partition Defined"
-      // WindowExec warning in the test suite — the empty partition spec
-      // IS the fixture (r15: every main-source bounded window runs
-      // through OpsKit.boundedWin and no longer warns)
-      val df = graft.ops.OpsKit.events(spark, dir)
-        .select(col("event_id"), col("value"))
-        .withColumn("rn", row_number().over(
-          Window.orderBy(col("value").desc, col("event_id"))))
-        .filter(col("rn") <= 5)
-      assert(!df.queryExecution.optimizedPlan.toString
-        .contains("TopKPerGroup"))
-      assert(df.count() == 5) // and it still runs
-    } finally spark.conf.set("spark.graft.topk.rewrite", "false")
+    // ClusteredDistribution(Nil) would be rejected at planning — the
+    // rule must leave the global form to TakeOrderedAndProject.
+    // WAIVER: this is the one sanctioned "No Partition Defined"
+    // WindowExec warning in the test suite — the empty partition spec
+    // IS the fixture (every main-source bounded window runs through
+    // OpsKit.boundedWin and does not warn)
+    val df = graft.ops.OpsKit.events(spark, dir)
+      .select(col("event_id"), col("value"))
+      .withColumn("rn", row_number().over(
+        Window.orderBy(col("value").desc, col("event_id"))))
+      .filter(col("rn") <= 5)
+    assert(!df.queryExecution.optimizedPlan.toString
+      .contains("TopKPerGroup"))
+    assert(df.count() == 5) // and it still runs
   }
 
   test("rewrite rule: non-matching filters stay untouched when enabled") {
     import org.apache.spark.sql.expressions.Window
-    spark.conf.set("spark.graft.topk.rewrite", "true")
-    try {
-      // rank() (not row_number) and a non-literal bound must not match
-      val df = graft.ops.OpsKit.events(spark, dir)
-        .select(col("event_type"), col("event_id"), col("value"))
-        .withColumn("rk", rank().over(Window
-          .partitionBy(col("event_type"))
-          .orderBy(col("value").desc, col("event_id"))))
-        .filter(col("rk") <= 5)
-      assert(!df.queryExecution.optimizedPlan.toString
-        .contains("TopKPerGroup"))
-      assert(df.count() > 0)
-    } finally spark.conf.set("spark.graft.topk.rewrite", "false")
+    // rank() (not row_number) must not match
+    val df = graft.ops.OpsKit.events(spark, dir)
+      .select(col("event_type"), col("event_id"), col("value"))
+      .withColumn("rk", rank().over(Window
+        .partitionBy(col("event_type"))
+        .orderBy(col("value").desc, col("event_id"))))
+      .filter(col("rk") <= 5)
+    assert(!df.queryExecution.optimizedPlan.toString
+      .contains("TopKPerGroup"))
+    assert(df.count() > 0)
   }
 
   test("property: random tables, keys, ties and k agree with a scalar") {
