@@ -7,14 +7,18 @@ import graft.sink.JdbcSink
 /** Drop-in replacement for the reference's CLI contract
   * (`loader.py dataset_base_path`, reference loader.py:549-607): read the
   * four Kaggle CSVs from a dataset directory, run the three pipelines, and
-  * load all 15 tables over JDBC in FK-safe order.
+  * load all 15 tables over JDBC in three FK-level waves (7 dims, `movies`,
+  * 7 bridges), the tables of a wave written concurrently.
   *
   * Differences from the reference, all documented at the component level:
   * distributed DataFrame execution instead of single-threaded iterrows
   * (loader.py:120), native types end-to-end instead of stringify-all
-  * (loader.py:356-361), write ordering instead of trigger deferral
+  * (loader.py:356-361), FK-ordered waves instead of trigger deferral
   * (JdbcSink), NULL instead of the 'nan' string for missing text
   * (SURVEY.md §7.4.4).
+  *
+  * The CLI runs `local[Sessions.cpus]` with one shuffle partition per
+  * thread; `SPARK_MASTER` overrides the master.
   */
 object MovieDbImport {
 
@@ -39,7 +43,8 @@ object MovieDbImport {
     require(args.length == 2,
       "USAGE: MovieDbImport dataset_base_path jdbc_url")
     val spark = Sessions
-      .builder(sys.env.getOrElse("SPARK_MASTER", "local[*]"), 32)
+      .builder(sys.env.getOrElse("SPARK_MASTER", s"local[${Sessions.cpus}]"),
+        Sessions.cpus)
       .getOrCreate()
     try run(spark, args(0), args(1))
     finally spark.stop()

@@ -40,6 +40,18 @@ object Sessions {
       // fires on foldable partition keys — which this codebase produces
       // solely through boundedWin, by design.
       .config("spark.sql.optimizer.excludedRules", ExcludedRules)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+
+  /** Size of Spark's JVM-wide LRU cache of compiled generated classes
+    * (static conf, so set here; Spark's default is 100). One CSV→15-table
+    * import needs about 200 classes: at 100, three imports of the test
+    * fixture in one session compiled 207, 203 and 204 classes with
+    * Janino; at 1000 they compile 173, 0 and 0. A warm pass of the six
+    * benchmark queries compiles 130 classes at 100 and 9–18 at 1000. The
+    * 314-query battery compiles 9695 classes at 100 and 7496 at 1000,
+    * for about 8 MB more metaspace. SCALING.md ("Import") has the
+    * measurements. */
+  val CodegenCacheEntries = 1000
 
   /** The optimizer rules every session excludes (see [[builder]]). */
   val ExcludedRules =

@@ -34,7 +34,9 @@ import graft.model.RefSchemas
   *    documented deviation).
   *
   * Scale notes: the parsed base is cached once (it feeds 10 outputs — the
-  * reference fuses all extractions into one pass, loader.py:120-225);
+  * reference fuses all extractions into one pass, loader.py:120-225), and
+  * so are the three intermediates more than one table reads: the
+  * last-wins hub, languages and countries;
   * surrogate-key windows run on distinct dimension values only (≤ a few
   * thousand rows), never on facts; dimension joins back to facts are
   * broadcast.
@@ -104,6 +106,7 @@ object MoviesPipeline {
     val wLast = Window.partitionBy(col("movie_id")).orderBy(col(SeqCol).desc)
     val hub = base.withColumn("_rn", row_number().over(wLast))
       .filter(col("_rn") === 1).drop("_rn")
+      .cache() // feeds movies and 4 bridges
 
     // ---- languages: dense ids over (row, orig-before-spoken) order -------
     // EVERY row sights its orig_lang — including the 'nan' sentinel rows
@@ -130,6 +133,7 @@ object MoviesPipeline {
       "id", DimIdCap, col("first_seen"))
       .select(col("id").cast("int").as("id"), col("lang_key"),
         col("named.lname").as("name"))
+      .cache() // feeds languages, movies and spoken_languages
 
     // ---- countries: dense ids, name fixed at first sighting --------------
     val countrySight = base
@@ -145,6 +149,7 @@ object MoviesPipeline {
       "id", DimIdCap, col("first.seq"), col("first.pos"))
       .select(col("id").cast("int").as("id"), col("code"),
         col("first.cname").as("name"))
+      .cache() // feeds countries and production_countries
 
     // ---- first-wins dims from ALL rows -----------------------------------
     def firstWinsDim(exploded: DataFrame, idCol: String, nameCol: String): DataFrame =

@@ -1162,9 +1162,9 @@ object CurationOps {
           .groupBy(input_file_name().as("file"))
           .agg(min(col("doc_id")).as("fmin"), max(col("doc_id")).as("fmax"),
             count(lit(1)).as("fcnt"), bit_xor(rowh).as("fchk"))
-        val mdf = broadcast(s.createDataFrame(manifest)
+        val mdf = s.createDataFrame(manifest)
           .select(col("file"), col("min_key"), col("max_key"),
-            col("n_rows").as("m_rows")))
+            col("n_rows").as("m_rows"))
         // ≤ 8 rows from here down: the window and final agg are bounded
         val w = org.apache.spark.sql.expressions.Window.partitionBy(lit(0)).orderBy(col("fmin"))
         perFile.join(mdf, Seq("file"), "full")

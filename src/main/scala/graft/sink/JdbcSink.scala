@@ -1,6 +1,7 @@
 package graft.sink
 
 import java.sql.DriverManager
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects, JdbcType}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -31,14 +32,21 @@ private object DerbyVarcharDialect extends JdbcDialect {
   *    columns the writer never sends);
   *  - the reference's trigger-deferral dance (loader.py:67-78: disable ALL
   *    triggers, bulk-load in arbitrary order, re-enable WITHOUT validation)
-  *    is replaced by a dims → hub → bridges WRITE ORDER, so referential
-  *    order is right by construction. FK clauses are exposed separately in
+  *    is replaced by three FK-level WAVES — the 7 dims, then `movies`, then
+  *    the 7 bridges — so referential order is right by construction. The
+  *    tables of one wave are written concurrently, each from its own
+  *    driver thread: each table's write is a few small Spark jobs, and
+  *    written one after another they left most task slots idle. FK clauses are exposed separately in
   *    [[fkDdl]] for engines that can apply them post-load — note the
   *    Kaggle data itself violates them (credits rows for movies absent
   *    from movies_metadata), which the reference silently loads;
   *  - inserts go through Spark's JDBC writer with the reference's batch
   *    size (db_config.json:6, batch_size=50000) and bounded parallel
-  *    connections.
+  *    connections — except the bridges, each written through ONE
+  *    connection: Derby's identity generator can fail concurrent first
+  *    inserts into a fresh identity column with lock timeout 40XL1. Bridge
+  *    ids stay database-generated, as the reference's `serial` columns
+  *    are.
   */
 object JdbcSink {
 
@@ -170,10 +178,11 @@ object JdbcSink {
   }
 
   /** O-5: batched append of one table (batchsize 50 000, bounded parallel
-    * connections — each DF partition opens one). */
+    * connections — each DF partition opens one). A table with an identity
+    * column is written through a single connection (see the header). */
   def writeTable(df: DataFrame, url: String, table: String,
       numPartitions: Int = 8): Unit =
-    df.coalesce(numPartitions)
+    df.coalesce(if (hasIdentity(table)) 1 else numPartitions)
       .write.format("jdbc")
       .option("url", url)
       .option("dbtable", table)
@@ -181,26 +190,59 @@ object JdbcSink {
       .mode("append")
       .save()
 
-  /** Full 15-table load in FK-safe order. */
-  def writeAll(mt: MoviesTables, ct: CreditsTables, kt: KeywordsTables,
-      url: String): Unit = {
-    createSchema(url)
-    val tables: Seq[(String, DataFrame)] = Seq(
+  /** Whether `table`'s sink DDL has an identity column (the bridges). */
+  def hasIdentity(table: String): Boolean =
+    tableDdl.exists { case (t, ddl) => t == table && ddl.contains("IDENTITY") }
+
+  /** The 15 tables in FK-level waves: dims, the hub, bridges. */
+  def waves(mt: MoviesTables, ct: CreditsTables,
+      kt: KeywordsTables): Seq[Seq[(String, DataFrame)]] = Seq(
+    Seq(
       "genres" -> mt.genres,
       "languages" -> mt.languages.select("id", "lang_key", "name"),
       "collections" -> mt.collections,
       "countries" -> mt.countries.select("id", "code", "name"),
       "production_companies" -> mt.productionCompanies,
       "persons" -> ct.persons,
-      "keywords" -> kt.keywords,
-      "movies" -> mt.movies,
+      "keywords" -> kt.keywords),
+    Seq("movies" -> mt.movies),
+    Seq(
       "movies_genres" -> mt.moviesGenres,
       "movies_production_companies" -> mt.moviesProductionCompanies,
       "production_countries" -> mt.productionCountries,
       "spoken_languages" -> mt.spokenLanguages,
       "movies_keywords" -> kt.moviesKeywords,
       "directors" -> ct.directors,
-      "actors" -> ct.actors)
-    tables.foreach { case (name, df) => writeTable(df, url, name) }
+      "actors" -> ct.actors))
+
+  /** Full 15-table load: drop-and-create, then [[writeWaves]]. */
+  def writeAll(mt: MoviesTables, ct: CreditsTables, kt: KeywordsTables,
+      url: String): Unit = {
+    createSchema(url)
+    writeWaves(waves(mt, ct, kt), url)
+  }
+
+  /** Appends each wave's tables concurrently, one driver thread per table,
+    * and starts a wave only when the previous one has finished. The first
+    * failure (in wave order, the others attached as suppressed) is
+    * rethrown once its wave has finished; no later wave starts.
+    * The pool lives for this call only: its threads are not daemons, so a
+    * pool left running would keep the JVM alive. Threads are created by
+    * this call's thread and so inherit its Spark local properties. */
+  def writeWaves(waves: Seq[Seq[(String, DataFrame)]], url: String): Unit = {
+    val pool = Executors.newFixedThreadPool(waves.map(_.size).max)
+    try waves.foreach { wave =>
+      val pending = wave.map { case (name, df) =>
+        pool.submit(new Callable[Unit] { def call(): Unit = writeTable(df, url, name) })
+      }
+      val failures = pending.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally pool.shutdownNow()
   }
 }

@@ -1,8 +1,13 @@
 package graft
 
 import java.sql.DriverManager
+import java.util.concurrent.{Callable, Executors}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.{CreditsPipeline, KeywordsPipeline, MoviesPipeline}
+import graft.etl.CreditsPipeline.CreditsTables
+import graft.etl.KeywordsPipeline.KeywordsTables
+import graft.etl.MoviesPipeline.MoviesTables
 import graft.sink.JdbcSink
 
 /** Round-trip of the full 15-table load into embedded Derby: fixture CSVs →
@@ -11,7 +16,13 @@ class JdbcSinkSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val url = "jdbc:derby:memory:graftSink;create=true"
 
-  private def query1[T](sql: String)(f: java.sql.ResultSet => T): Vector[T] = {
+  /** One statement of `JdbcSink.fkDdl`: (table, column, referenced table). */
+  private val alterFk =
+    ("""ALTER TABLE (\w+) ADD FOREIGN KEY \((\w+)\) """ +
+      """REFERENCES (\w+) \(id\)""").r
+
+  private def query1[T](sql: String, url: String = url)(
+      f: java.sql.ResultSet => T): Vector[T] = {
     val con = DriverManager.getConnection(url)
     try {
       val rs = con.createStatement().executeQuery(sql)
@@ -148,16 +159,104 @@ class JdbcSinkSpec extends AnyFunSuite {
       m <- entry.findAllMatchIn(raw)
       fk <- fkClause.findAllMatchIn(m.group(2).toLowerCase)
     } yield (m.group(1), fk.group(1), fk.group(2))).toSet
-    val alter =
-      ("""ALTER TABLE (\w+) ADD FOREIGN KEY \((\w+)\) """ +
-        """REFERENCES (\w+) \(id\)""").r
     val ourEdges = JdbcSink.fkDdl.map {
-      case alter(t, c, r) => (t, c, r)
+      case alterFk(t, c, r) => (t, c, r)
       case other => fail(s"unparseable FK DDL: $other")
     }.toSet
     assert(ourEdges == refEdges,
       s"FK edges differ:\n  extra   ${ourEdges -- refEdges}" +
         s"\n  missing ${refEdges -- ourEdges}")
     assert(JdbcSink.fkDdl.size == refEdges.size) // no duplicates either
+  }
+
+  private def count(url: String, table: String): Long =
+    query1(s"SELECT COUNT(*) FROM $table", url)(_.getLong(1)).head
+
+  /** (table, column) → referenced table, for every edge in `fkDdl`. */
+  private val fkTarget: Map[(String, String), String] =
+    JdbcSink.fkDdl.map { case alterFk(t, c, r) => (t, c) -> r }.toMap
+
+  /** Rows of each table's synthetic frame in the FK-consistent load. */
+  private def synthRows(table: String): Int =
+    if (table == "movies") 20 else if (JdbcSink.hasIdentity(table)) 40 else 5
+
+  /** A `partitions`-partition frame of `rows` rows with `table`'s sink
+    * columns (bridge ids left to Derby): ids 1..rows, each FK column
+    * cycling over the ids of its target's synthetic frame, every other
+    * column derived from the row number. */
+  private def synthetic(table: String, rows: Int, partitions: Int): DataFrame = {
+    val ddl = JdbcSink.tableDdl.toMap.apply(table)
+    val cols = ddl.stripPrefix("(").stripSuffix(")").split(",").toSeq
+      .map(_.trim.split("\\s+")).map(c => c(0) -> c(1))
+      .filterNot { case (c, _) => c == "id" && JdbcSink.hasIdentity(table) }
+    spark.range(rows).repartition(partitions).selectExpr(cols.map {
+      case (c, _) if fkTarget.contains(table -> c) =>
+        s"CAST(id % ${synthRows(fkTarget(table -> c))} + 1 AS INT) AS $c"
+      case ("id", _) => "CAST(id + 1 AS INT) AS id"
+      case (c, ty) if ty.startsWith("VARCHAR") => s"CAST(id AS STRING) AS $c"
+      case (c, ty) => s"CAST(id AS $ty) AS $c"
+    }: _*)
+  }
+
+  test("bridge tables written concurrently from cached frames never hit 40XL1") {
+    // Derby's identity generator can fail the first concurrent inserts
+    // into a fresh identity column with lock timeout 40XL1. With one
+    // connection per partition of a cached frame (all partitions start at
+    // once), a few percent of such table writes fail, so 30 rounds of
+    // fresh tables all but surely meet it. writeTable sends a bridge
+    // through one connection instead.
+    val url = "jdbc:derby:memory:graftBridges;create=true"
+    val rows = 100
+    val bridges = JdbcSink.tableDdl.map(_._1).filter(JdbcSink.hasIdentity)
+      .map(t => t -> synthetic(t, rows, 4).cache())
+    bridges.foreach(_._2.count())
+    val pool = Executors.newFixedThreadPool(bridges.size)
+    try for (round <- 1 to 30) {
+      JdbcSink.createSchema(url)
+      bridges.map { case (t, df) =>
+        pool.submit(new Callable[Unit] { def call(): Unit = JdbcSink.writeTable(df, url, t) })
+      }.foreach(_.get())
+      bridges.foreach { case (t, _) =>
+        assert(count(url, t) == rows, s"$t in round $round")
+      }
+    } finally {
+      pool.shutdown()
+      bridges.foreach(_._2.unpersist())
+    }
+  }
+
+  test("FK-level waves load FK-consistent frames under constraints applied up front") {
+    val url = "jdbc:derby:memory:graftWaves;create=true"
+    def t(name: String): DataFrame = synthetic(name, synthRows(name), 4)
+    val waves = JdbcSink.waves(
+      MoviesTables(t("movies"), t("genres"), t("languages"), t("collections"),
+        t("countries"), t("production_companies"), t("movies_genres"),
+        t("spoken_languages"), t("production_countries"),
+        t("movies_production_companies")),
+      CreditsTables(t("persons"), t("directors"), t("actors")),
+      KeywordsTables(t("keywords"), t("movies_keywords")))
+    assert(waves.map(_.size) == Seq(7, 1, 7))
+    assert(waves.flatten.map(_._1) == JdbcSink.tableDdl.map(_._1))
+    def freshConstrainedSchema(): Unit = {
+      JdbcSink.createSchema(url)
+      JdbcSink.applyConstraints(url)
+    }
+
+    freshConstrainedSchema()
+    JdbcSink.writeWaves(waves, url)
+    JdbcSink.tableDdl.foreach { case (table, _) =>
+      assert(count(url, table) == synthRows(table), table)
+    }
+
+    // Bridges ahead of their hub violate the movie_id FKs; the failure
+    // ends the load before the hub's wave starts.
+    freshConstrainedSchema()
+    val Seq(dims, hub, bridges) = waves
+    val e = intercept[Exception](JdbcSink.writeWaves(Seq(dims, bridges, hub), url))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(x => String.valueOf(x.getMessage)).mkString("\n")
+    assert(messages.contains("foreign key"), messages)
+    assert(count(url, "movies") == 0)
+    assert(count(url, "genres") == synthRows("genres"))
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.DriverManager
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end test of the reference-CLI replacement: a dataset directory
@@ -11,14 +12,18 @@ class MovieDbImportSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val url = "jdbc:derby:memory:graftImport;create=true"
 
-  test("run() imports a dataset directory end-to-end") {
-    val dir = TestSpark.tempDir("graft-dataset")
+  /** A new dataset directory holding the four fixture CSVs. */
+  private def datasetDir(prefix: String): String = {
+    val dir = TestSpark.tempDir(prefix)
     for (f <- Seq("movies_metadata.csv", "credits.csv", "keywords.csv",
         "ratings.csv"))
       Files.copy(Paths.get(TestSpark.fixture(f)), dir.resolve(f),
         StandardCopyOption.REPLACE_EXISTING)
+    dir.toString
+  }
 
-    MovieDbImport.run(spark, dir.toString, url)
+  test("run() imports a dataset directory end-to-end") {
+    MovieDbImport.run(spark, datasetDir("graft-dataset"), url)
 
     val con = DriverManager.getConnection(url)
     try {
@@ -43,11 +48,7 @@ class MovieDbImportSpec extends AnyFunSuite {
 
   test("re-running the import is idempotent (drop-recreate-append)") {
     val url2 = "jdbc:derby:memory:graftImportTwice;create=true"
-    val dir = TestSpark.tempDir("graft-dataset-rerun")
-    for (f <- Seq("movies_metadata.csv", "credits.csv", "keywords.csv",
-        "ratings.csv"))
-      Files.copy(Paths.get(TestSpark.fixture(f)), dir.resolve(f),
-        StandardCopyOption.REPLACE_EXISTING)
+    val dir = datasetDir("graft-dataset-rerun")
     // full multiset snapshot of every table, read back through the same
     // JDBC source path FormatsSpec covers
     def snapshot(): Map[String, Seq[String]] =
@@ -56,12 +57,29 @@ class MovieDbImportSpec extends AnyFunSuite {
           .option("dbtable", t).load()
           .collect().map(_.toString).sorted.toSeq
       }.toMap
-    MovieDbImport.run(spark, dir.toString, url2)
+    MovieDbImport.run(spark, dir, url2)
     val first = snapshot()
-    MovieDbImport.run(spark, dir.toString, url2)
+    MovieDbImport.run(spark, dir, url2)
     val second = snapshot()
     assert(first.values.map(_.size).sum == 52) // same totals as run #1's test
     assert(second == first,
       "second run changed table contents — import is not idempotent")
+  }
+
+  test("a warm import finds its generated classes in Spark's codegen cache") {
+    // Each pass mirrors the benchmark's import: a fresh database, then the
+    // session's cache cleared. One import needs about 200 generated
+    // classes. With Spark's default cache of 100 entries, the three
+    // imports of this suite run alone compiled 207, 203 and 204.
+    val dir = datasetDir("graft-dataset-codegen")
+    def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val perImport = (1 to 3).map { i =>
+      val before = compiles()
+      MovieDbImport.run(spark, dir, s"jdbc:derby:memory:graftCodegen$i;create=true")
+      spark.catalog.clearCache()
+      compiles() - before
+    }
+    info(s"classes compiled per import: ${perImport.mkString(", ")}")
+    assert(perImport(2) <= 10)
   }
 }
