@@ -46,9 +46,11 @@ object BenchDev {
         new org.apache.spark.scheduler.SparkListener {
           override def onJobStart(
               j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+            // nothing sets callSite.short; a stage is named after the
+            // call site that created it, e.g. "parquet at OpsKit.scala:52"
             val site = Option(j.properties)
-              .flatMap(p => Option(p.getProperty("spark.job.description"))
-                .orElse(Option(p.getProperty("callSite.short"))))
+              .flatMap(p => Option(p.getProperty("spark.job.description")))
+              .orElse(j.stageInfos.headOption.map(_.name))
               .getOrElse("?")
             t.put(j.jobId, (System.nanoTime(), site))
           }

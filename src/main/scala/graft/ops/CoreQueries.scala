@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -523,57 +523,70 @@ object CoreQueries {
     // ----- q191: column profile (the warehouse intake report) -------------
     // The first query anyone runs on an unfamiliar table: per column —
     // row count, null count, exact distinct count, min and max. ONE scan
-    // computes all 24 aggregates (a per-column loop would be six scans
-    // of a 100 TB table), then `stack` unpivots the single row into the
-    // six-row report. Mins/maxes are rendered to strings on a fixed
+    // feeds all six columns (a per-column loop would be six scans of a
+    // 100 TB table): each event explodes into six cells, one per column,
+    // and a single GROUP BY column profiles them all. A cell carries its
+    // column's index, 1 when the value is NULL, an injective string of
+    // the value that only the distinct count reads (doubles normalized as
+    // countDistinct does: -0.0 counts as 0.0, every NaN as one value),
+    // and the value itself in the one carrier of its type, so min and
+    // max keep their typed order. Six countDistincts over the raw columns
+    // would plan a 7-way Expand whose distinct groups Spark lays out in a
+    // different order on every run, so its generated classes miss the
+    // codegen cache and compile again each time; one countDistinct over
+    // the cell string plans no Expand. Six all-NULL cells from a
+    // one-partition `range` are unioned in, so an empty table still
+    // reports six rows (n_rows 0, n_nulls NULL, n_distinct 0) as a
+    // global aggregate would. Mins/maxes are rendered to strings on a fixed
     // contract per type (longs verbatim, doubles via the DECIMAL(28,6)
     // grid — never engine-native double formatting, whose exponent
     // notation differs — timestamps via the shared TsFmt), so one
-    // VARCHAR column carries every type without a schema union. Exact
-    // distincts expand the aggregate; the approximate twin is q41's HLL
-    // when the intake report can tolerate ±2%.
+    // VARCHAR column carries every type without a schema union. The
+    // approximate twin is q41's HLL when the intake report can tolerate
+    // ±2%.
     NamedQuery(
       "q191_data_profile",
       (s, d) => {
         val ev = events(s, d)
-        def nulls(c: String) =
-          sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"nu_$c")
-        def nd(c: String) = countDistinct(col(c)).as(s"nd_$c")
-        val agg = ev.agg(
-          count(lit(1)).as("n"),
-          nulls("event_id"), nd("event_id"),
-          min(col("event_id")).cast("string").as("mn_event_id"),
-          max(col("event_id")).cast("string").as("mx_event_id"),
-          nulls("ts"), nd("ts"),
-          date_format(min(col("ts")), TsFmt).as("mn_ts"),
-          date_format(max(col("ts")), TsFmt).as("mx_ts"),
-          nulls("user_id"), nd("user_id"),
-          min(col("user_id")).cast("string").as("mn_user_id"),
-          max(col("user_id")).cast("string").as("mx_user_id"),
-          nulls("event_type"), nd("event_type"),
-          min(col("event_type")).as("mn_event_type"),
-          max(col("event_type")).as("mx_event_type"),
-          nulls("value"), nd("value"),
-          min(col("value")).cast("decimal(28,6)").cast("string")
-            .as("mn_value"),
-          max(col("value")).cast("decimal(28,6)").cast("string")
-            .as("mx_value"),
-          nulls("props"), nd("props"),
-          min(col("props")).as("mn_props"),
-          max(col("props")).as("mx_props"))
-        agg.select(expr(
-          """stack(6,
-            |  'event_id', n, nu_event_id, nd_event_id, mn_event_id,
-            |    mx_event_id,
-            |  'ts', n, nu_ts, nd_ts, mn_ts, mx_ts,
-            |  'user_id', n, nu_user_id, nd_user_id, mn_user_id,
-            |    mx_user_id,
-            |  'event_type', n, nu_event_type, nd_event_type,
-            |    mn_event_type, mx_event_type,
-            |  'value', n, nu_value, nd_value, mn_value, mx_value,
-            |  'props', n, nu_props, nd_props, mn_props, mx_props)
-            |  AS (column_name, n_rows, n_nulls, n_distinct, min_value,
-            |      max_value)""".stripMargin))
+        val names =
+          Seq("event_id", "ts", "user_id", "event_type", "value", "props")
+        val noL = lit(null).cast("long")
+        val noT = lit(null).cast("timestamp")
+        val noD = lit(null).cast("double")
+        val noS = lit(null).cast("string")
+        def cell(c: String, key: Column, l: Column = noL, t: Column = noT,
+            dv: Column = noD, st: Column = noS) =
+          struct(lit(names.indexOf(c)).as("i"),
+            when(col(c).isNull, 1L).otherwise(0L).as("nu"), key.as("v"),
+            l.as("l"), t.as("t"), dv.as("dv"), st.as("st"))
+        val v = col("value")
+        val cells = ev.select(explode(array(
+          cell("event_id", col("event_id").cast("string"),
+            l = col("event_id")),
+          cell("ts", unix_micros(col("ts")).cast("string"), t = col("ts")),
+          cell("user_id", col("user_id").cast("string"),
+            l = col("user_id")),
+          cell("event_type", col("event_type"), st = col("event_type")),
+          cell("value", when(v === 0.0, lit(0.0)).otherwise(v)
+            .cast("string"), dv = v),
+          cell("props", col("props"), st = col("props")))).as("c"))
+          .select("c.*")
+        val blanks = s.range(0, names.size, 1, 1).select(
+          col("id").cast("int").as("i"), noL.as("nu"), noS.as("v"),
+          noL.as("l"), noT.as("t"), noD.as("dv"), noS.as("st"))
+        // exactly one carrier is non-NULL in a column's cells
+        def rendered(agg: String => Column) = coalesce(
+          agg("l").cast("string"), date_format(agg("t"), TsFmt),
+          agg("dv").cast("decimal(28,6)").cast("string"), agg("st"))
+        cells.union(blanks).groupBy("i").agg(
+          count(col("nu")).as("n_rows"),
+          sum(col("nu")).as("n_nulls"),
+          countDistinct(col("v")).as("n_distinct"),
+          rendered(min(_)).as("min_value"),
+          rendered(max(_)).as("max_value"))
+          .select(element_at(typedLit(names), col("i") + 1)
+            .as("column_name"), col("n_rows"), col("n_nulls"),
+            col("n_distinct"), col("min_value"), col("max_value"))
       },
       Some(s"""WITH agg AS (
              |  SELECT CAST(COUNT(*) AS BIGINT) AS n,

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, StructType}
 
 /** A named query with an optional DuckDB oracle (ANSI SQL over the same
   * parquet tables). Queries without an oracle get a weaker rows-only check
@@ -30,8 +30,51 @@ object OpsKit {
   /** DuckDB strftime equivalent of [[TsFmt]]. */
   val TsFmtDuck = "%Y-%m-%d %H:%M:%S"
 
-  def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A fresh read of `dir/name.parquet`, with the schema Spark inferred
+    * for that path earlier in the session. Inference costs a Spark job
+    * per read, and every run of a session would get the same answer.
+    *
+    * The memo is keyed by session UUID and path, and an entry holds the
+    * path's leaf files (name, length, modification time) from one Hadoop
+    * listing, which runs no job. A table rewritten at the same path lists
+    * differently, so it is inferred again and replaces its entry, and the
+    * map keeps one entry per (session, path). A new session infers on its
+    * own, so its parquet confs always apply. Only the schema is shared:
+    * each call builds a new DataFrame with fresh expression ids, which
+    * queries that read a table twice and join it rely on. */
+  def tbl(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = (org.apache.spark.sql.GraftSqlShim.sessionUUID(spark), path)
+    val files = leafFiles(spark, path)
+    val schema = schemaMemo.get(key) match {
+      case (`files`, known) => known
+      case _ =>
+        val inferred = spark.read.parquet(path).schema
+        schemaMemo.put(key, (files, inferred))
+        inferred
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), (Seq[(String, Long, Long)], StructType)]()
+
+  /** Empty for a missing path: inference then fails with Spark's own
+    * error, and nothing is memoized. */
+  private def leafFiles(spark: SparkSession,
+      path: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val b = Seq.newBuilder[(String, Long, Long)]
+    try {
+      val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        b += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+    } catch { case _: java.io.FileNotFoundException => () }
+    b.result()
+  }
 
   /** `events.parquet`'s `ts` physical type has varied across driver data
     * generations: TIMESTAMP(NANOS) (read as raw long via
