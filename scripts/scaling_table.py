@@ -25,10 +25,10 @@ for sf in ("0.001", "0.01", "0.1"):
         agg[q] = min(r[q] for r in runs if q in r)
     mins[sf] = agg
 
-# per-SF floor-gate adjudication (r15 verdict item 7): every capture at
-# every scale factor carries Bench's floor_gate block; surface them so a
-# contended capture at ANY sf is machine-readable in SCALING.md, not
-# just the sf0.1 headline
+# per-SF floor gates: every capture at every scale factor carries Bench's
+# floor_gate block (ok, re-time rounds, worst best/floor ratio); print
+# them so a capture with queries still over 2x their floor is visible at
+# any sf, not just sf0.1
 print("per-SF floor gates (ok/rounds/max_vs_floor per capture):")
 for sf in ("0.001", "0.01", "0.1"):
     gs = gates.get(sf, [])

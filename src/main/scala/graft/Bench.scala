@@ -1,421 +1,231 @@
 package graft
-/** Benchmark entrypoint: times every registered query at the sf dir from
-  * SPARK_GRAFT_SF_DIR and prints ONE JSON line. A query that throws is
-  * reported in an "errors" map (and its wall time recorded honestly) so a
-  * regression can never masquerade as a speedup.
+
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+import scala.annotation.tailrec
+import scala.util.Try
+import scala.util.control.NonFatal
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+
+/** Developer benchmark of the query registry at the sf dir named by
+  * SPARK_GRAFT_SF_DIR. With no argument it runs every query; `q1,q2,...`
+  * or `top:<record>[:n]` (the n slowest queries of an earlier record)
+  * runs a subset the same way. After an untimed warm-up each query runs
+  * twice and keeps its faster successful run, then [[floorGate]] re-times
+  * the queries over 2× their committed floor. The record goes to
+  * target/bench/<sf>-<epoch>.json, and the last stdout line is a summary
+  * under 1 KB that names it. A query that throws is reported in `errors`
+  * and the exit code is 1.
   */
 object Bench {
-  /** max/MEDIAN spread of the sentinel's observed times. Pure so the spec
-    * can feed synthetic sequences (the flag is load-bearing for
-    * adjudication: the r12 judge read `contended` to decide which capture
-    * to believe). The floor is the lower median, not the min: max/min is
-    * fragile in both directions — a crashed sentinel fabricates a
-    * near-zero floor (r12 ADVICE), and ONE slow startup sample over a
-    * fast floor trips the bar on a clean battery (observed on the r13
-    * scaling captures: first post-warmup sample 0.387 s over a 0.124 s
-    * floor read 3.11× on an idle box, while the real r12 episode reads
-    * 4.6× under max/median and the clean captures read 1.6–2.6×). A
-    * battery where MOST samples are contended inflates the median and
-    * can evade the flag — but such uniform slowdown also inflates both
-    * min-of-2 passes consistently, which is the comparable-total case,
-    * not the episodic misadjudication the sentinel exists to catch.
-    * Non-positive samples are excluded entirely.
-    */
-  def sentinelSpread(times: Seq[Double]): Double = {
-    val pos = times.filter(_ > 0).sorted
-    if (pos.isEmpty) 1.0
-    else pos.max / pos((pos.size - 1) / 2)
+  /** Local property naming the query run a Spark job belongs to. */
+  val Label = "graft.bench.query"
+
+  /** Counts Spark jobs by their [[Label]]. AQE stage jobs inherit the
+    * property of the action that submits them; unlabeled jobs count as
+    * "other". */
+  final class JobCounter extends SparkListener {
+    private val n = new ConcurrentHashMap[String, AtomicInteger]()
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      val l = Option(e.properties).flatMap(p => Option(p.getProperty(Label)))
+      n.computeIfAbsent(l.getOrElse("other"), _ => new AtomicInteger).incrementAndGet()
+    }
+    def apply(label: String): Int = Option(n.get(label)).fold(0)(_.get)
+    def total: Int = n.values.stream.mapToInt(_.get).sum
   }
 
-  /** Contention bar: on an idle box the sentinel (a few MB of warm parquet)
-    * re-times at max/median 1.6–2.6× (six r13 captures); the episodes
-    * that poisoned BENCH_r11/r12 read 4.6×+ under the same metric.
-    * 3× splits those populations with margin both ways.
-    */
-  val ContendedBar = 3.0
-  def isContended(times: Seq[Double]): Boolean = sentinelSpread(times) > ContendedBar
-
-  /** Pick the queries to re-time in the self-repair pass: the worst n by
-    * first/best ratio (first pass hit by an episode) UNION the worst n by
-    * best time (both passes hit — ratio looks clean but the min is still
-    * poisoned). Input tuples are (name, best, first); only successful
-    * queries should be offered. Pure for the spec.
-    */
-  def repassCandidates(results: Seq[(String, Double, Double)], n: Int): Seq[String] = {
-    val byRatio = results.filter(_._2 > 0).sortBy { case (_, b, f) => -(f / b) }.take(n).map(_._1)
-    val byBest = results.sortBy(-_._2).take(n).map(_._1)
-    (byRatio ++ byBest).distinct
+  /** One run of `name` with its jobs labeled `label`: (seconds, error). */
+  def run(spark: SparkSession, sfDir: String, name: String,
+      label: String): (Double, Option[String]) = {
+    val sc = spark.sparkContext
+    sc.setLocalProperty(Label, label)
+    val t0 = System.nanoTime()
+    val err = try { SparkEntry.queries(name)(spark, sfDir).count(); None }
+      catch { case NonFatal(e) =>
+        Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)) }
+      finally sc.setLocalProperty(Label, null)
+    ((System.nanoTime() - t0) / 1e9, err)
   }
 
-  /** Third repass trigger (r14): queries whose min-of-2 exceeds 2× their
-    * COMMITTED floor (scripts/bench_floors.tsv — per-query minima over
-    * the committed capture set). The worst-n lists are blind to an
-    * episodic sub-second query that isn't among the slowest (r14 capture
-    * diff: q80 at 1.61 s vs a 0.35 s floor, both passes poisoned, ratio
-    * clean) — the floor comparison catches exactly that class, so every
-    * capture-vs-capture >2× excursion carries a repass record. Capped by
-    * worst best/floor ratio: a box that is uniformly slower would
-    * otherwise re-run the whole battery. Pure for the spec. */
-  def floorCandidates(results: Seq[(String, Double, Double)],
+  /** Min-of-2: (best seconds, error). A failing first run is not repeated,
+    * and a failing second run keeps the first time, so a time-to-crash
+    * never poses as a fast run. The second run's jobs carry the bare
+    * query name. */
+  def timeQuery(spark: SparkSession, sfDir: String,
+      name: String): (Double, Option[String]) = {
+    val (first, err) = run(spark, sfDir, name, s"$name#1")
+    if (err.nonEmpty) (first, err)
+    else {
+      val (second, err2) = run(spark, sfDir, name, name)
+      (if (err2.isEmpty) math.min(first, second) else first, err2)
+    }
+  }
+
+  /** Queries whose best time is strictly over 2× their floor, worst ratio
+    * first, at most `cap`. A missing or non-positive floor is inert. */
+  def floorCandidates(results: Seq[(String, Double)],
       floors: Map[String, Double], cap: Int = 32): Seq[String] =
     results
-      .collect { case (name, best, _)
-        if floors.get(name).exists(f => f > 0 && best > 2 * f) =>
-        name -> (best / floors(name))
-      }
+      .collect { case (name, best) if floors.get(name).exists(f => f > 0 && best > 2 * f) =>
+        name -> best / floors(name) }
       .sortBy(-_._2).take(cap).map(_._1)
 
-  /** Overwrite guard (r15 verdict #3): a battery that FAILS the floor
-    * gate must not replace a committed BENCH_FULL whose gate PASSED —
-    * r15's driver refresh landed floor_gate ok:false (contended,
-    * sentinel spread 4.06) over a clean committed record and the
-    * official headline inherited the dirty battery. Decision is from
-    * the committed record's own text (same sf, `"ok":true`), so the
-    * guard never misfires across scale factors; when it fires the
-    * committed record stays the headline and the failed battery is
-    * preserved separately as contended evidence. Pure for the spec. */
-  def keepCommitted(committed: Option[String], newGateOk: Boolean,
-      sf: String): Boolean =
-    !newGateOk && committed.exists { j =>
-      j.contains("\"floor_gate\":{\"ok\":true") &&
-        j.contains(s""""sf":"$sf"""")
-    }
-
-  /** Splice a guard annotation into the kept committed record so the
-    * headline documents the rejection machine-readably. */
-  def annotateKept(committed: String, rejectedTotal: Double): String = {
-    val t = committed.trim
-    // replace, never stack: a second gate-failing battery over an
-    // already-annotated kept record must not produce duplicate "guard"
-    // keys in the JSON (r16 ADVICE) — cut any prior annotation first
-    val base = t.indexOf(""","guard":{"kept_committed"""") match {
-      case -1 => t.stripSuffix("}")
-      case i  => t.substring(0, i)
-    }
-    base +
-      s""","guard":{"kept_committed":true,"rejected":"BENCH_REJECTED.json","rejected_total":$rejectedTotal}}"""
+  final case class Gate(results: Seq[(String, Double)], rounds: Int, over: Seq[String]) {
+    def ok: Boolean = over.isEmpty
   }
 
-  /** A kept-committed record is recognizable by the guard annotation
-    * annotateKept splices in. Such a record is last round's headline, not
-    * a measurement of the tree under test — it must never be filed as a
-    * fresh A/B control capture (r17 verdict weak mark: the r16-tree
-    * control was gate-rejected at 180.9 s, the guard silently substituted
-    * the r16 committed record, and SCALING.md quoted the substitute as a
-    * same-day measurement). Pure for the spec. */
-  def isKeptRecord(json: String): Boolean =
-    json.contains(""""guard":{"kept_committed"""")
-
-  /** Where an A/B control battery may be filed. A capture lands at the
-    * requested path ONLY if it is a genuinely fresh record (no guard
-    * annotation) whose own floor gate passed and whose sentinel read
-    * uncontended; anything else is labeled `rejected_<basename>` in the
-    * same directory, so a gate refusal stays auditable but can never
-    * masquerade as a control. Pure for the spec. */
-  def abCapturePath(requested: String, record: String,
-      gateOk: Boolean, contended: Boolean): String = {
-    val fresh = !isKeptRecord(record) && gateOk && !contended
-    if (fresh) requested
-    else {
-      val f = new java.io.File(requested)
-      new java.io.File(f.getParentFile, "rejected_" + f.getName).getPath
+  /** The floor gate over successful queries' best times: up to 3 rounds
+    * re-time only the [[floorCandidates]] and keep each query's minimum
+    * (a failed re-time, None, keeps the old best). The gate fails when
+    * queries are still over their floor after the last round. */
+  def floorGate(results: Seq[(String, Double)], floors: Map[String, Double],
+      retime: String => Option[Double]): Gate = {
+    @tailrec def loop(rs: Seq[(String, Double)], rounds: Int): Gate = {
+      val over = floorCandidates(rs, floors)
+      if (over.isEmpty || rounds == 3) Gate(rs, rounds, over)
+      else loop(rs.map { case r @ (name, best) =>
+        if (over.contains(name)) name -> retime(name).fold(best)(math.min(best, _)) else r
+      }, rounds + 1)
     }
+    loop(results, 0)
   }
 
-  /** First free non-overwriting slot for a rejected battery:
-    * BENCH_REJECTED.json, BENCH_REJECTED_2.json, … — r17 lost the 180.9 s
-    * A/B rejection because a later 182.5 s rejection overwrote the single
-    * BENCH_REJECTED.json (r17 verdict item 6). `exists` is injected so
-    * the spec can pin slot selection without touching the filesystem. */
-  def rejectedSlot(exists: String => Boolean): String =
-    (Iterator("BENCH_REJECTED.json") ++
-      Iterator.from(2).map(i => s"BENCH_REJECTED_$i.json"))
-      .find(!exists(_)).get
-
-  /** The file that holds the fresh record: BENCH_FULL.json, or, when the
-    * overwrite guard keeps the committed record there, the first free
-    * rejected slot. Pure for the spec. */
-  def freshRecordFile(guardFires: Boolean, exists: String => Boolean): String =
-    if (guardFires) rejectedSlot(exists) else "BENCH_FULL.json"
-
-  /** The LAST stdout line and the BENCH_TOTAL.json payload: ALWAYS the
-    * fresh total (r18 verdict item 1 — when the overwrite guard fired,
-    * this line used to substitute the committed total), with the guard
-    * verdict as annotations (`gate_ok`, `kept_committed`,
-    * `committed_total`). It carries no per-query or per-error map, so it
-    * stays under 1 KB and fits a 2.5 KB log tail whole; `full` names
-    * the file that holds the fresh record with those maps. Pure for the
-    * spec. */
-  def freshSummaryLine(freshTotal: Double, gateOk: Boolean,
-      keptCommitted: Boolean, committedTotal: Option[Double],
-      contended: Boolean, nQueries: Int, nErrors: Int, full: String,
-      sf: String): String = {
-    val committed = committedTotal
-      .map(t => s""""committed_total":$t,""").getOrElse("")
-    s"""{"metric":"total","value":$freshTotal,"unit":"sec","gate_ok":$gateOk,"kept_committed":$keptCommitted,$committed"contended":$contended,"n_queries":$nQueries,"n_errors":$nErrors,"full":"$full","sf":"$sf"}"""
-  }
-
-  /** Committed per-query floors for one sf dir (by basename) from the
-    * tsv; missing file or unparsable rows → empty (the trigger is then
-    * inert, never wrong). */
-  def loadFloors(sfDir: String): Map[String, Double] = {
+  private def floorLines: Seq[String] = {
     val f = new java.io.File("scripts/bench_floors.tsv")
-    val sf = new java.io.File(sfDir).getName
-    if (!f.exists) Map.empty
+    if (!f.exists) Nil
     else {
       val src = scala.io.Source.fromFile(f, "UTF-8")
-      try src.getLines()
-        .filterNot(l => l.startsWith("#") || l.trim.isEmpty)
-        .flatMap { l =>
-          l.split("\t") match {
-            case Array(s, q, v) if s == sf => v.toDoubleOption.map(q -> _)
-            case _ => None
-          }
-        }.toMap
-      finally src.close()
+      try src.getLines().toList finally src.close()
     }
   }
+
+  /** Committed per-query floors for one sf dir (by basename); a missing
+    * file or unparsable rows give no floor, which leaves the gate inert. */
+  def loadFloors(sfDir: String): Map[String, Double] = {
+    val sf = new java.io.File(sfDir).getName
+    floorLines.filterNot(l => l.startsWith("#") || l.trim.isEmpty).flatMap { l =>
+      l.split("\t") match {
+        case Array(s, q, v) if s == sf => v.toDoubleOption.map(q -> _)
+        case _ => None
+      }
+    }.toMap
+  }
+
+  private val TopSpec = """top:(.+?)(?::([0-9]+))?""".r
+
+  /** A `top:<file>[:<n>]` spec as (file, n), parsed from the right: a
+    * trailing `:<digits>` is n (default 30) and the rest is the path, so
+    * the path may itself contain ':'. */
+  def parseTop(spec: String): (String, Int) = spec match {
+    case TopSpec(file, n) => (file, Option(n).fold(30)(_.toInt))
+    case _ => sys.error("usage: Bench top:<file>[:n]")
+  }
+
+  /** The query names of a record's `queries` map, slowest first. Other
+    * maps with the same keys (`jobs`) are not read. */
+  def topQueries(record: String): Seq[String] =
+    """"queries":\{([^}]*)\}""".r.findFirstMatchIn(record).toSeq.flatMap { m =>
+      """"([^"]+)":([0-9.eE+\-]+)""".r.findAllMatchIn(m.group(1))
+        .map(p => p.group(1) -> p.group(2).toDouble)
+    }.sortBy(-_._2).map(_._1)
+
+  /** The last stdout line: no per-query map, so it stays under 1 KB. */
+  def summaryLine(total: Double, gateOk: Boolean, nQueries: Int, nErrors: Int,
+      cpus: Int, stealPct: Double, full: String, sf: String): String =
+    s"""{"metric":"total","value":$total,"unit":"sec","gate_ok":$gateOk,"n_queries":$nQueries,"n_errors":$nErrors,"cpus":$cpus,"steal_pct":$stealPct,"full":${jstr(full)},"sf":${jstr(sf)}}"""
+
+  private def jstr(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""; case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  private def obj(kvs: Seq[(String, String)]): String =
+    kvs.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
+
+  private def round(v: Double, digits: Int): Double = {
+    val s = math.pow(10, digits)
+    math.round(v * s) / s
+  }
+
+  /** (steal, total) jiffies of all CPUs from /proc/stat; zeros elsewhere. */
+  private def cpuTimes(): (Long, Long) = Try {
+    val v = Files.readAllLines(Paths.get("/proc/stat")).get(0)
+      .split("\\s+").drop(1).map(_.toLong)
+    (v.lift(7).getOrElse(0L), v.take(8).sum)
+  }.getOrElse((0L, 0L))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val names = args.headOption match {
+      case None => SparkEntry.queries.keys.toSeq.sorted
+      case Some(spec) if spec.startsWith("top:") =>
+        val (file, n) = parseTop(spec)
+        topQueries(new String(Files.readAllBytes(Paths.get(file)), StandardCharsets.UTF_8))
+          .filter(SparkEntry.queries.contains).take(n)
+      case Some(csv) => csv.split(",").toSeq
+    }
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    val (steal0, total0) = cpuTimes()
     val spark = Sessions.local.getOrCreate()
-    // ERROR, not WARN: the 80+-query run emits enough WARN noise to push
-    // the one JSON result line out of the driver's log-tail capture
-    // (BENCH_r05 lost its total line to exactly that)
+    // WARN noise of a long battery buries the summary line
     spark.sparkContext.setLogLevel("ERROR")
-    // Untimed warmup: absorb JVM/codegen/parquet-footer startup cost so the
-    // first timed query isn't charged for it (VERDICT r1: q16 artifact).
+    val jobs = new JobCounter
+    spark.sparkContext.addSparkListener(jobs)
+    // Untimed warm-up: JVM, codegen and parquet-footer startup cost is not
+    // charged to the first timed query
+    spark.sparkContext.setLocalProperty(Label, "warmup")
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    var errors = List.empty[(String, String)]
-    // Contention sentinel (r11 verdict item 2): BENCH_r11 recorded 269 s
-    // for a tree that re-times at ~153 s — a box-level contention episode
-    // spanned BOTH passes of min-of-2 and nothing in the record let the
-    // driver see it. Defense: re-time ONE fixed cheap reference query at
-    // the start, after every ~25 queries, and at the end. On an idle box
-    // its times are flat (it reads a few MB of parquet, warm after the
-    // first run); under the contention that poisoned r11 the worst
-    // observations were 5–13× the clean ones, so a max/min spread > 3×
-    // is machine-readable evidence the battery is contaminated and the
-    // headline total should be re-measured, not believed.
-    val sentinelName = "q01_scan_project"
-    val sentinelFn = SparkEntry.queries(sentinelName)
-    sentinelFn(spark, sfDir).count() // warm: footer + codegen off the clock
-    var sentinelTimes = List.empty[Double]
-    def sentinel(): Unit = {
-      val t0 = System.nanoTime()
-      // record the timing ONLY when the count succeeds (r12 ADVICE): a fast
-      // failure would log a near-zero sample, inflating max/min spread and
-      // potentially flipping contended=true on a clean battery
-      val ok = try { sentinelFn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-      if (ok) sentinelTimes ::= (System.nanoTime() - t0) / 1e9
+    try SparkEntry.entry(spark).count() catch {
+      case NonFatal(e) => System.err.println(s"bench warm-up failed: ${e.getMessage}")
     }
-    sentinel()
-    // min-of-2 PER QUERY (second pass immediately after the first, not a
-    // second battery): this box's run-to-run noise is ±25% (SCALING.md),
-    // and a single-pass battery has printed 19.3 s for a query that runs
-    // in 1.3 s isolated (BENCH_r09 q176). The min is the signal the 2×
-    // regression gate should read; the honest first-pass total (which
-    // includes every cache-cold cost exactly once) is reported alongside.
-    var sinceSentinel = 0
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      def once(): (Double, Boolean) = {
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch {
-          case e: Throwable =>
-            errors ::= (name, Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
-            false
-        }
-        ((System.nanoTime() - t0) / 1e9, ok)
-      }
-      val (first, firstOk) = once()
-      // don't re-run a failing query (it would double-log the error), and
-      // the min is taken over SUCCESSFUL passes only — a flaky second
-      // pass's time-to-crash must not pose as a fast run to the 2× gate
-      // (n_errors still increments for it)
-      val best =
-        if (!firstOk) first
-        else {
-          val (second, secondOk) = once()
-          if (secondOk) math.min(first, second) else first
-        }
-      sinceSentinel += 1
-      if (sinceSentinel >= 25) { sinceSentinel = 0; sentinel() }
-      (name, best, first)
-    }
-    sentinel()
-    val sTimes = sentinelTimes.reverse
-    val spreadObserved = sentinelSpread(sTimes)
-    val contended = isContended(sTimes)
-    // ms precision keeps the 80+-query JSON line compact (full double
-    // reprs nearly double its length for no information)
-    def ms(v: Double): Double = math.round(v * 1000) / 1000.0
-    // Self-repair (r12 verdict item 3, widened per the r13 verdict):
-    // detection alone still let two rounds' official numbers inherit box
-    // noise (r11 AND r12 driver captures were contended; the sentinel
-    // proved it but the headline total stayed wrong), and r13 showed the
-    // complementary blind spot — a sentinel-CLEAN battery still carried
-    // ~12 s of localized episodes (q146 4.60 s vs 0.82–0.93 s in three
-    // clean captures) because the 25-query sentinel grid straddled them.
-    // So the bounded third pass now ALWAYS runs: re-time the most
-    // suspect queries — worst by first/best ratio (episode hit the first
-    // pass) plus worst by best time (episode hit both passes, so the
-    // ratio looks clean but the min is still poisoned) — and keep the
-    // per-query min. n=8 each (≤16 extra runs, ~30 s of a ~220 s
-    // battery) on a clean battery; a contended one widens to n=16 each.
-    // The `contended` flag keeps describing the battery as observed;
-    // `repass` records the repair, and the `timing` field names the
-    // actual protocol (r13 ADVICE: min-of-2 must not understate it).
-    val failedNames = errors.map(_._1).toSet
-    val ok = results.filterNot(r => failedNames(r._1))
+    spark.sparkContext.setLocalProperty(Label, null)
+    val timed = names.map(n => n -> timeQuery(spark, sfDir, n))
+    val errors = timed.collect { case (n, (_, Some(e))) => n -> e }
     val floors = loadFloors(sfDir)
-    val cand = (repassCandidates(ok, if (contended) 16 else 8) ++
-      floorCandidates(ok, floors)).toSet
-    def retime(rs: Seq[(String, Double, Double)],
-        which: Set[String]): Seq[(String, Double, Double)] =
-      rs.map { case r @ (name, best, first) =>
-        if (!which(name)) r
-        else {
-          val t0 = System.nanoTime()
-          val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-            catch { case _: Throwable => false }
-          val t = (System.nanoTime() - t0) / 1e9
-          if (ok) (name, math.min(best, t), first) else r
-        }
-      }
-    var finalResults = retime(results, cand)
-    // r15 floor gate (r14 verdict #1): the COMMITTED battery must not
-    // carry any query above 2× its committed floor — r14's official
-    // record landed with 27 such rows (q20 at 11.8×) because one repass
-    // re-timed inside the same contention episode and nothing refused
-    // the result. Loop bounded floor repasses until the battery is
-    // floor-clean or the retry budget is spent, then RECORD the verdict
-    // (`floor_gate`) so a still-dirty battery is machine-readably
-    // disqualified from being the official headline instead of silently
-    // overstating the tree by 40%.
-    var floorRounds = 0
-    var overFloor = floorCandidates(
-      finalResults.filterNot(r => failedNames(r._1)), floors)
-    while (overFloor.nonEmpty && floorRounds < 3) {
-      floorRounds += 1
-      finalResults = retime(finalResults, overFloor.toSet)
-      overFloor = floorCandidates(
-        finalResults.filterNot(r => failedNames(r._1)), floors)
-    }
-    // failed queries are excluded exactly as floorCandidates excludes
-    // them (r15 ADVICE): a crashed query's time-to-crash must not report
-    // max_vs_floor > 2 alongside ok:true — the ratio and the ok flag
-    // describe the same query set
-    val maxVsFloor = finalResults
-      .filterNot(r => failedNames(r._1))
-      .collect { case (n, b, _) if floors.get(n).exists(_ > 0) =>
-        b / floors(n) }
+    val gate = floorGate(timed.collect { case (n, (t, None)) => n -> t }, floors,
+      n => run(spark, sfDir, n, s"$n#r") match {
+        case (t, None) => Some(t)
+        case _ => None
+      })
+    val best = timed.map { case (n, (t, _)) => n -> t }.toMap ++ gate.results
+    spark.stop() // drains the listener bus, so every job is counted
+    val (steal1, total1) = cpuTimes()
+    val stealPct = round(100.0 * (steal1 - steal0) / math.max(1L, total1 - total0), 2)
+    val maxVsFloor = gate.results
+      .collect { case (n, b) if floors.get(n).exists(_ > 0) => b / floors(n) }
       .foldLeft(0.0)(math.max)
-    val saved = results.map(_._2).sum - finalResults.map(_._2).sum
-    val timing = s"min-of-2 per query (+1 repass on ${cand.size} queries" +
-      s", +$floorRounds floor-gate rounds)"
-    val qs = finalResults.map { case (k, v, _) => s"${jstr(k)}:${ms(v)}" }
-      .mkString("{", ",", "}")
-    // per-query first/best ratio (BENCH_FULL only): a clean battery sits
-    // near 1–2 (cache-cold first pass); a cluster of queries at 5–10×
-    // localizes WHEN a contention episode hit even if the sentinel's
-    // 25-query grid straddled it
-    val ratios = finalResults.collect { case (k, b, f) if b > 0 =>
-      s"${jstr(k)}:${math.round(f / b * 100) / 100.0}"
-    }.mkString("{", ",", "}")
-    val es = errors.reverse.map { case (k, m) => s"${jstr(k)}:${jstr(m)}" }
-      .mkString("{", ",", "}")
-    val total = finalResults.map(_._2).sum
-    val totalFirst = finalResults.map(_._3).sum
-    val sentinelJson = s""""sentinel":{"query":${jstr(sentinelName)},"times":${sTimes.map(ms).mkString("[", ",", "]")},"spread":${math.round(spreadObserved * 100) / 100.0},"contended":$contended}"""
-    // stop FIRST, print LAST: nothing (not even executor-shutdown noise)
-    // may follow the result lines the driver tail-captures
-    spark.stop()
-    val repassJson = s""""repass":{"n":${cand.size},"saved_sec":${ms(saved)},"queries":${cand.toSeq.sorted.map(jstr).mkString("[", ",", "]")}},"""
-    // floor provenance rides the gate record (r15 ADVICE): the tsv's
-    // header comment names the capture set the floors were regenerated
-    // from, so a floor reset is visible in the bench record itself
-    val floorProv = {
-      val f = new java.io.File("scripts/bench_floors.tsv")
-      if (!f.exists) ""
-      else {
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.getLines().find(_.startsWith("#"))
-          .getOrElse("").stripPrefix("#").trim
-        finally src.close()
-      }
+    val total = round(best.values.sum, 3)
+    val sf = new java.io.File(sfDir).getName
+    val path = s"target/bench/$sf-${System.currentTimeMillis / 1000}.json"
+    val floorGateJson = obj(Seq("ok" -> gate.ok.toString, "rounds" -> gate.rounds.toString,
+      "max_vs_floor" -> round(maxVsFloor, 2).toString,
+      "over" -> gate.over.sorted.map(jstr).mkString("[", ",", "]"),
+      "floors_n" -> floors.size.toString,
+      "floors_provenance" -> jstr(floorLines.find(_.startsWith("#"))
+        .getOrElse("").stripPrefix("#").trim)))
+    val record = obj(Seq("metric" -> jstr("total"), "value" -> total.toString,
+      "unit" -> jstr("sec"), "floor_gate" -> floorGateJson,
+      "queries" -> obj(names.map(n => n -> round(best(n), 3).toString)),
+      "jobs" -> obj(names.map(n => n -> jobs(n).toString)),
+      "jobs_total" -> jobs.total.toString, "jobs_other" -> jobs("other").toString,
+      "errors" -> obj(errors.map { case (n, e) => n -> jstr(e) }),
+      "n_errors" -> errors.size.toString, "cpus" -> Sessions.cpus.toString,
+      "host" -> jstr(Try(new String(Files.readAllBytes(Paths.get("/proc/sys/kernel/hostname")),
+        StandardCharsets.UTF_8).trim).getOrElse("?")),
+      "steal_pct" -> stealPct.toString, "sf" -> jstr(sfDir)))
+    try {
+      Files.createDirectories(Paths.get("target/bench"))
+      Files.write(Paths.get(path), (record + "\n").getBytes(StandardCharsets.UTF_8))
+    } catch {
+      case NonFatal(e) => System.err.println(s"bench: could not write $path: $e")
     }
-    val floorJson = s""""floor_gate":{"ok":${overFloor.isEmpty},"rounds":$floorRounds,"max_vs_floor":${math.round(maxVsFloor * 100) / 100.0},"over":${overFloor.sorted.map(jstr).mkString("[", ",", "]")},"floors_n":${floors.size},"floors_provenance":${jstr(floorProv)}},"""
-    val full = s"""{"metric":"total","value":${ms(total)},"unit":"sec","timing":${jstr(timing)},"total_first_pass":${ms(totalFirst)},"contended":$contended,$repassJson$floorJson$sentinelJson,"queries":$qs,"first_best_ratio":$ratios,"errors":$es,"n_errors":${errors.size},"sf":"$sfDir"}"""
-    // A log-tail capture keeps only ~2.5 KB of this output, and the full
-    // record is far larger (its head fell out of the window in
-    // BENCH_r05/r06). So the full record goes to a file that can be read
-    // whole, the full line still prints for full-log readers, and the
-    // compact summary (freshSummaryLine, no per-query maps) prints LAST,
-    // so the tail always holds one intact parseable line.
-    def writeLine(path: String, line: String): Unit =
-      try {
-        val w = new java.io.PrintWriter(path, "UTF-8")
-        try w.println(line) finally w.close()
-      } catch { case _: Throwable => () } // read-only cwd must not kill the bench
-    // Overwrite guard (r15 verdict #3, see keepCommitted): a
-    // gate-FAILING battery never replaces a gate-PASSING committed
-    // record — the committed record stays the headline (annotated) and
-    // the failed battery lands in BENCH_REJECTED.json as evidence.
-    val committedRec =
-      try {
-        val f = new java.io.File("BENCH_FULL.json")
-        if (!f.exists) None
-        else {
-          val src = scala.io.Source.fromFile(f, "UTF-8")
-          try Some(src.mkString.trim) finally src.close()
-        }
-      } catch { case _: Throwable => None }
-    val committedTotal = committedRec.flatMap(j =>
-      """"metric":"total","value":([0-9.eE+\-]+)""".r
-        .findFirstMatchIn(j).flatMap(_.group(1).toDoubleOption))
-    val guardFires = keepCommitted(committedRec, overFloor.isEmpty, sfDir) &&
-      committedTotal.nonEmpty
-    // A/B control mode (r17 verdict weak mark): SPARK_GRAFT_AB_CAPTURE
-    // names the control-capture file for this battery. What gets filed
-    // there is ALWAYS the fresh battery record — never a kept committed
-    // substitute — and it lands at the requested name only when its own
-    // gate passed uncontended; otherwise it is labeled rejected_* so the
-    // refusal is auditable but can never pose as a control.
-    sys.env.get("SPARK_GRAFT_AB_CAPTURE").foreach { req =>
-      writeLine(abCapturePath(req, full, overFloor.isEmpty, contended), full)
-    }
-    // Non-overwriting archive (r17 verdict item 6): when the guard fires,
-    // the fresh record lands in the first free numbered rejected slot (so
-    // history survives until the round workflow commits it under
-    // bench_captures/rN/), and BENCH_REJECTED.json additionally tracks
-    // the LATEST rejection for compat readers.
-    val freshFile = freshRecordFile(guardFires, new java.io.File(_).exists)
-    // stdout and BENCH_TOTAL.json ALWAYS carry the fresh total, whether
-    // or not the guard fires; the guard decides only what lands in the
-    // committed BENCH_FULL.json file
-    val summary = freshSummaryLine(ms(total), overFloor.isEmpty,
-      guardFires, if (guardFires) committedTotal.map(ms) else None,
-      contended, finalResults.size, errors.size, freshFile, sfDir)
-    writeLine(freshFile, full)
-    if (guardFires) {
-      if (freshFile != "BENCH_REJECTED.json")
-        writeLine("BENCH_REJECTED.json", full)
-      writeLine("BENCH_FULL.json", annotateKept(committedRec.get, ms(total)))
-    }
-    // the fresh summary alone in its own 1-line file — the driver's
-    // "parsed": null tail-scrape bug (4 rounds running) can't lose it
-    writeLine("BENCH_TOTAL.json", summary)
-    // the fresh FULL record always prints (guard-annotated records live
-    // only in files); the fresh summary prints LAST so the tail window
-    // ends with the line that carries value + gate verdict
-    println(full)
-    println(summary)
+    println(summaryLine(total, gate.ok, names.size, errors.size, Sessions.cpus,
+      stealPct, path, sfDir))
     if (errors.nonEmpty) sys.exit(1)
   }
 }
