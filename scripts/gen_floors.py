@@ -1,16 +1,19 @@
 #!/usr/bin/env python3
-"""Regenerate scripts/bench_floors.tsv from a round's committed bench
-captures: per (sf, query), the minimum over every capture's min-of-2.
+"""Regenerate scripts/bench_floors.tsv from bench captures: per (sf,
+query), the minimum over every capture's min-of-2.
 
-Usage: gen_floors.py [bench_captures/rN]  (default: newest rN dir)
-       gen_floors.py --selftest           (unit-check the note arithmetic)
+Usage: gen_floors.py [DIR ...]  (default: newest bench_captures/rN dir)
+       gen_floors.py --selftest (unit-check the note arithmetic)
 
-Run this whenever the capture set changes — Bench's third repass
-trigger compares each live min-of-2 against these floors (>2x is
-re-timed and recorded), so stale floors make the trigger fire on real
-improvements' inverse: a much FASTER tree never trips it (floors are
-minima, excursions are upward), but floors from a retired slower tree
-would mask regressions. Keep them in the same commit as the captures.
+A capture is either a committed `bench_<sf>_<n>.json` or a record that
+Bench writes itself, `<sf>-<epoch>.json` (as under target/bench). When
+no capture is found the script exits non-zero and leaves the tsv as it
+is: an empty floor set would turn Bench's floor gate off.
+
+Run this whenever the capture set changes — Bench's floor gate compares
+each live min-of-2 against these floors (>2x is re-timed, and fails if
+it stays over), so floors from a retired slower tree would mask
+regressions. Keep them in the same commit as the captures.
 
 The raise note in the header diffs against the LAST ROUND's committed
 tsv (the newest `round N:` driver commit), NOT the on-disk file: an
@@ -73,6 +76,35 @@ def committed_baseline():
         return {}, "empty baseline"
 
 
+def capture_sf(path):
+    """The sf key of a capture file, or None for any other file:
+    bench_0.01_2.json -> sf0.01, sf0.01-1760000000.json -> sf0.01."""
+    name = os.path.basename(path)
+    m = re.fullmatch(r"bench_(.+)_\d+\.json", name)
+    if m:
+        return "sf" + m.group(1)
+    m = re.fullmatch(r"(sf.+)-\d+\.json", name)
+    return m.group(1) if m else None
+
+
+def collect_floors(dirs):
+    """({sf: {query: min seconds}}, number of captures read)."""
+    floors = collections.defaultdict(dict)
+    n = 0
+    for d in dirs:
+        for p in sorted(glob.glob(os.path.join(d, "*.json"))):
+            sf = capture_sf(p)
+            if sf is None:
+                continue
+            with open(p) as f:
+                cap = json.load(f)
+            n += 1
+            for q, t in cap["queries"].items():
+                if q not in floors[sf] or t < floors[sf][q]:
+                    floors[sf][q] = t
+    return floors, n
+
+
 def selftest():
     # raise counting: only strictly-higher floors count; worst is a ratio
     prev = {("sf0.1", "q1"): 1.0, ("sf0.1", "q2"): 2.0,
@@ -87,6 +119,10 @@ def selftest():
     # zero/missing baselines never divide or count
     note3 = raise_note({("sf0.1", "q1"): 0.0}, {"sf0.1": {"q1": 5.0}}, "B")
     assert note3 == "no floors raised vs B", note3
+    # both capture namings map to the tsv's sf key; other files are skipped
+    assert capture_sf("x/bench_0.01_2.json") == "sf0.01"
+    assert capture_sf("target/bench/sf0.01-1760000000.json") == "sf0.01"
+    assert capture_sf("x/notes.json") is None
     # parse round-trips the emitted row format
     assert parse_tsv("# h\nsf0.1\tq1\t1.250\n") == {("sf0.1", "q1"): 1.25}
     # the baseline resolver anchors on a `round N:` commit when one
@@ -110,16 +146,10 @@ else:
         sys.exit("no bench_captures/r* directory")
     dirs = [rounds[-1]]
 
-floors = collections.defaultdict(dict)
-n = 0
-for d in dirs:
-    for p in sorted(glob.glob(f"{d}/bench_*_*.json")):
-        sf = "sf" + os.path.basename(p)[len("bench_"):].rsplit("_", 1)[0]
-        cap = json.load(open(p))
-        n += 1
-        for q, t in cap["queries"].items():
-            if q not in floors[sf] or t < floors[sf][q]:
-                floors[sf][q] = t
+floors, n = collect_floors(dirs)
+if n == 0:
+    sys.exit(f"no captures in {'+'.join(dirs)}; scripts/bench_floors.tsv "
+             "left unchanged")
 
 # floor-reset visibility (r15 ADVICE + r16 verdict): a regeneration that
 # RAISES floors (slower box, or a genuinely slower tree) must be visible
@@ -133,7 +163,7 @@ lines = [
     "# per-query committed bench floors: sf<TAB>query<TAB>"
     f"min-over-committed-captures ({'+'.join(dirs)}); {reset_note}",
     "# regenerated alongside the captures (scripts/gen_floors.py; pass "
-    "several capture dirs for cross-round minima); Bench repasses any "
+    "several capture dirs for cross-round minima); Bench re-times any "
     "query whose min-of-2 exceeds 2x its floor",
 ]
 for sf in sorted(floors):

@@ -8,7 +8,8 @@ import org.apache.spark.sql.execution.SparkPlan
 /** Construction-time plan recorder for the scan-count gate
   * ([[graft.ScanCount]]).
   *
-  * `OpsKit.pinned` and `GovernanceOps.familyMemo` materialize their inputs
+  * `OpsKit.pinned` and the near-dup family artifacts (built once per
+  * session through [[graft.ops.SessionMemo]]) materialize their inputs
   * EAGERLY while a query is being BUILT, so the corpus scans they execute
   * never appear in the final DataFrame's plan — a gate that only walked
   * the final plan would read a heavily-pinned query as "zero scans". When
@@ -21,9 +22,9 @@ object ScanAudit {
   @volatile var enabled = false
   private val plans = mutable.Buffer.empty[(SparkPlan, Boolean)]
 
-  /** `amortized = true` marks a per-battery cost (a familyMemo artifact
-    * build: it runs for the FIRST query in a session that needs it and
-    * never again in that session). Both gates exclude amortized plans —
+  /** `amortized = true` marks a per-session cost (a family artifact's
+    * [[graft.ops.SessionMemo]] build: it runs for the FIRST query in a
+    * session that needs it and never again in that session). Both gates exclude amortized plans —
     * including them would make per-query counts and plan signatures
     * depend on which query ran first, i.e. flaky. The amortization
     * itself is the family-artifact design the scale story documents
@@ -32,8 +33,8 @@ object ScanAudit {
     override def initialValue: Boolean = false
   }
 
-  /** Everything recorded while `f` evaluates is amortized — a familyMemo
-    * build closure may itself call pinned()/ckpt() helpers, and those
+  /** Everything recorded while `f` evaluates is amortized — a family
+    * artifact's build closure may itself call pinned()/ckpt() helpers, and those
     * inner records must inherit the build's per-battery accounting or
     * a building run counts scans a reading run doesn't (observed on
     * q141: cold 2, warm 0, before this scope existed). */

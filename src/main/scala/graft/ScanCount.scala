@@ -20,11 +20,12 @@ import org.apache.spark.sql.functions._
   *
   * For each registered query it counts, per corpus-scale table, the
   * parquet scans across BOTH the final plan and every construction-time
-  * materialization ([[ScanAudit]] — pinned/ckpt/familyMemo plans, which a
-  * final-plan walk alone cannot see), deduplicating persist() caches by
-  * cache-instance identity and skipping ReusedExchange subtrees. A query
-  * scanning the SAME corpus table more than [[MaxScansPerTable]] times
-  * fails the gate unless allowlisted with a reason.
+  * materialization ([[ScanAudit]] — pinned/ckpt/family-artifact plans,
+  * which a final-plan walk alone cannot see), deduplicating persist()
+  * caches by cache-instance identity and skipping ReusedExchange
+  * subtrees. A query scanning the SAME corpus table more than
+  * [[MaxScansPerTable]] times fails the gate unless allowlisted with a
+  * reason.
   *
   * Known limitation: a construction-time `collect()` over an unpinned,
   * unaudited subtree executes scans this gate cannot see (the
@@ -161,8 +162,8 @@ object ScanCount {
 
   /** Construction + final plans for one registered query — the plan set
     * both the scan gate and the golden signature read. Amortized plans
-    * (familyMemo artifact builds) are excluded: they run once per
-    * session and data dir, so counting them would make the result
+    * (family artifact builds, [[graft.ops.SessionMemo]] entries) are
+    * excluded: they run once per session and data dir, so counting them would make the result
     * depend on which query ran first. Callers own cache hygiene
     * (clearCache between queries). */
   def queryPlans(spark: org.apache.spark.sql.SparkSession, name: String,

@@ -891,35 +891,19 @@ object GovernanceOps {
               |GROUP BY source""".stripMargin)),
   ) ++ splitAndGovernance
 
-  // ----- near-dup family memo -------------------------------------------
+  // ----- near-dup family artifacts --------------------------------------
   // The closure family (q47/q57/q93/q100/q103/q104/q114/q215/q231) and
   // the HyperANF pair (q261/q269) share corpus-row-sized artifacts: the
   // LSH candidate pair set, the StarCC and LPA labels, the per-document
   // curation decisions and the per-round ANF registers and balls. Each is
-  // built once per session and data dir, written as parquet, and every
-  // later consumer in that session reads the parquet. Parquet rather than
-  // persist(): the closure's per-round localCheckpoints make its plan
-  // canonically unique, so once the cached blocks are evicted the
-  // CacheManager can never re-match a rebuild and the family would
-  // silently pay its builds a second time; a file cannot be evicted. The
-  // files live in one per-JVM directory that is deleted at JVM exit, so
-  // no run ever reads what another run built.
-
-  /** Build counters: observability for the build-once contract
-    * (GovernanceMemoSpec asserts they do NOT advance after a forced
-    * cache eviction between two family queries). */
-  private[graft] val pairsBuilds =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-  private[graft] val closureBuilds =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private val memo = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String),
-    org.apache.spark.sql.DataFrame]()
-  // builds nest (labels reads pairs), and a computeIfAbsent that updates
-  // its own map from inside the mapping function throws, so a reentrant
-  // lock serializes the builds instead
-  private val buildLock = new java.util.concurrent.locks.ReentrantLock()
+  // built once per session and data dir ([[SessionMemo]]), written as
+  // parquet, and every later consumer in that session reads the parquet.
+  // Parquet rather than persist(): the closure's per-round
+  // localCheckpoints make its plan canonically unique, so once the cached
+  // blocks are evicted the CacheManager can never re-match a rebuild and
+  // the family would silently pay its builds a second time; a file cannot
+  // be evicted. The files live in one per-JVM directory that is deleted
+  // at JVM exit, so no run ever reads what another run built.
 
   private lazy val scratchDir: java.nio.file.Path = {
     val p = java.nio.file.Files.createTempDirectory("graft-scratch")
@@ -929,25 +913,18 @@ object GovernanceOps {
 
   private def familyMemo(s: org.apache.spark.sql.SparkSession,
       d: String, tag: String)(build: => org.apache.spark.sql.DataFrame):
-      org.apache.spark.sql.DataFrame = {
-    val key = (s, d, tag)
-    Option(memo.get(key)).getOrElse {
-      buildLock.lock()
-      try Option(memo.get(key)).getOrElse {
-        // a build scans the corpus once per session, not per query, so
-        // it is recorded as amortized (scope included: the build's own
-        // pinned() calls) and the per-query scan gates never count it
-        val b = graft.ScanAudit.amortizedScope(build)
-        graft.ScanAudit.record(b, amortized = true)
-        val path = scratchDir.resolve(
-          s"$tag-${java.util.UUID.randomUUID()}").toString
-        b.write.parquet(path)
-        val df = s.read.parquet(path)
-        memo.put(key, df)
-        df
-      } finally buildLock.unlock()
+      org.apache.spark.sql.DataFrame =
+    SessionMemo(s, d, tag) {
+      // a build scans the corpus once per session, not per query, so it
+      // is recorded as amortized (scope included: the build's own
+      // pinned() calls) and the per-query scan gates never count it
+      val b = graft.ScanAudit.amortizedScope(build)
+      graft.ScanAudit.record(b, amortized = true)
+      val path = scratchDir.resolve(
+        s"$tag-${java.util.UUID.randomUUID()}").toString
+      b.write.parquet(path)
+      s.read.parquet(path)
     }
-  }
 
   /** The ONE LSH pass over the shared near-dup corpus (id1, id2,
     * jaccard); every family consumer reads this. */
@@ -955,7 +932,6 @@ object GovernanceOps {
       s: org.apache.spark.sql.SparkSession, d: String):
       org.apache.spark.sql.DataFrame =
     familyMemo(s, d, "pairs") {
-      pairsBuilds.incrementAndGet()
       lshCandidatePairs(corpusWithNearDups(s, d))
     }
 
@@ -967,7 +943,6 @@ object GovernanceOps {
       s: org.apache.spark.sql.SparkSession, d: String):
       org.apache.spark.sql.DataFrame =
     familyMemo(s, d, "labels") {
-      closureBuilds.incrementAndGet()
       val corpus = corpusWithNearDups(s, d)
       val pairs = sharedPairs(s, d).select(col("id1"), col("id2"))
       StarCC.connectedComponents(corpus.select(col("doc_id")), pairs)._1
@@ -1045,9 +1020,6 @@ object GovernanceOps {
           (lit(64) - col("n_regs")).cast("double"))).as(name))
   }
 
-  private[graft] val lpaBuilds =
-    new java.util.concurrent.atomic.AtomicInteger(0)
-
   /** LPA community labels (doc_id, community, comm_size) over the shared
     * near-dup graph — a family artifact like the StarCC labels. q141
     * builds the three propagation rounds once; q197's modularity reads
@@ -1057,7 +1029,6 @@ object GovernanceOps {
       s: org.apache.spark.sql.SparkSession, d: String):
       org.apache.spark.sql.DataFrame =
     familyMemo(s, d, "labels-lpa") {
-      lpaBuilds.incrementAndGet()
       labelPropagation(corpusWithNearDups(s, d).select(col("doc_id")),
         sharedPairs(s, d).select(col("id1"), col("id2")), 3)
     }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, StructType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** A named query with an optional DuckDB oracle (ANSI SQL over the same
   * parquet tables). Queries without an oracle get a weaker rows-only check
@@ -34,30 +34,20 @@ object OpsKit {
     * for that path earlier in the session. Inference costs a Spark job
     * per read, and every run of a session would get the same answer.
     *
-    * The memo is keyed by session UUID and path, and an entry holds the
-    * path's leaf files (name, length, modification time) from one Hadoop
-    * listing, which runs no job. A table rewritten at the same path lists
-    * differently, so it is inferred again and replaces its entry, and the
-    * map keeps one entry per (session, path). A new session infers on its
+    * The schema is a [[SessionMemo]] entry stamped with the path's leaf
+    * files (name, length, modification time) from one Hadoop listing,
+    * which runs no job. A table rewritten at the same path lists
+    * differently, so it is inferred again. A new session infers on its
     * own, so its parquet confs always apply. Only the schema is shared:
     * each call builds a new DataFrame with fresh expression ids, which
     * queries that read a table twice and join it rely on. */
   def tbl(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val key = (org.apache.spark.sql.GraftSqlShim.sessionUUID(spark), path)
-    val files = leafFiles(spark, path)
-    val schema = schemaMemo.get(key) match {
-      case (`files`, known) => known
-      case _ =>
-        val inferred = spark.read.parquet(path).schema
-        schemaMemo.put(key, (files, inferred))
-        inferred
+    val schema = SessionMemo(spark, path, "schema", leafFiles(spark, path)) {
+      spark.read.parquet(path).schema
     }
     spark.read.schema(schema).parquet(path)
   }
-
-  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), (Seq[(String, Long, Long)], StructType)]()
 
   /** Empty for a missing path: inference then fails with Spark's own
     * error, and nothing is memoized. */

@@ -207,27 +207,20 @@ object SimilarityOps {
         col("m.cluster").as("cluster"), col("m.dist").as("dist"))
   }
 
-  /** Driver-side Lloyd state, memoized per (data dir, rounds, k): the
-    * trained centroids as plain JVM arrays. Bounded at k×dim doubles
-    * (k ≤ 32 in the r18 size sweep, so ≤ 2048 doubles) — the same
-    * centers-on-the-driver shape Spark MLlib's
+  /** Driver-side Lloyd state, memoized per (session, data dir, rounds,
+    * k) in [[SessionMemo]]: the trained centroids as plain JVM arrays.
+    * Bounded at k×dim doubles (k ≤ 32 in the r18 size sweep, so ≤ 2048
+    * doubles) — the same centers-on-the-driver shape Spark MLlib's
     * KMeans uses, NOT a data-sized collect. Iterating driver-side keeps
     * each Lloyd round at exactly ONE Spark job (an 8×64-row partial
     * aggregate) instead of re-executing every earlier round inside the
     * next round's broadcast build (the r8 nested-fold plan paid ~3.6 s
     * of plan/exchange constants for 2 updates at sf0.1). The memo is
     * what lets q111/q116/q117/q205 and the streaming twin share ONE
-    * training run per JVM. Exactness is unchanged: per-dim sums are
+    * training run per session. Exactness is unchanged: per-dim sums are
     * exact BIGINT sums over the 2^20 grid, and `sv.toDouble/n.toDouble`
     * is the same IEEE division the previous in-plan
     * `CAST(sv AS DOUBLE)/CAST(n AS DOUBLE)` performed. */
-  private val kmMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int, Int), Array[(Long, Array[Double])]]()
-
-  /** Test hook: drop the memoized Lloyd state so a spec can force
-    * training to re-run (KMeansSpec's partition-independence case). */
-  private[graft] def kmMemoClear(): Unit = kmMemo.clear()
-
   private def kmCentroidsLocal(
       s: SparkSession, d: String, rounds: Int): Array[(Long, Array[Double])] =
     kmCentroidsLocalK(s, d, rounds, k = 8)
@@ -239,7 +232,7 @@ object SimilarityOps {
   private def kmCentroidsLocalK(s: SparkSession, d: String, rounds: Int,
       k: Int): Array[(Long, Array[Double])] = {
     require(rounds >= 1, "kmeansTrain needs at least one assignment pass")
-    kmMemo.computeIfAbsent((d, rounds, k), _ => {
+    SessionMemo(s, d, s"km-$rounds-$k") {
       val corpus = kmCorpus(s, d)
       var cents: Array[(Long, Array[Double])] = corpus
         .filter(col("vec_id") < k)
@@ -267,7 +260,7 @@ object SimilarityOps {
         }
       }
       cents
-    })
+    }
   }
 
   /** The trained centroid table (cluster, ce: array<double>) after
@@ -631,10 +624,11 @@ object SimilarityOps {
           "CAST(floor(CAST(x AS DOUBLE) - c) AS BIGINT))").as("qr"))
       .persist()
 
-  /** Driver-side PQ Lloyd state, memoized per data dir: the per-cell
-    * per-subspace codebooks as (cluster, j, cwid, PqW doubles) — 8 cells
-    * × PqM=8 subspaces × ≤PqK=16 codewords = ≤1024 codewords, the MLlib
-    * centers-on-the-driver shape ([[kmCentroidsLocal]]'s pattern).
+  /** Driver-side PQ Lloyd state, memoized per session and data dir in
+    * [[SessionMemo]]: the per-cell per-subspace codebooks as (cluster, j,
+    * cwid, PqW doubles) — 8 cells × PqM=8 subspaces × ≤PqK=16 codewords
+    * = ≤1024 codewords, the MLlib centers-on-the-driver shape
+    * ([[kmCentroidsLocal]]'s pattern).
     * Seeds are each cell's 16 lowest-id members' residual subvectors
     * (exactly q306's untrained election, now just round 0); then two
     * Lloyd rounds: assignment = residual working set × broadcast
@@ -644,15 +638,9 @@ object SimilarityOps {
     * coarse quantizer uses. Empty codewords keep their previous value
     * (left-join + coalesce in the oracle). Each round is ONE Spark job
     * over the persisted working set. */
-  private val pqMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[(Long, Int, Int, Array[Double])]]()
-
-  /** Test hook: drop the memoized PQ state (partition-independence). */
-  private[graft] def pqMemoClear(): Unit = pqMemo.clear()
-
   private[graft] def pqCodebooksLocal(
       s: SparkSession, d: String): Array[(Long, Int, Int, Array[Double])] =
-    pqMemo.computeIfAbsent(d, _ => {
+    SessionMemo(s, d, "pq") {
       val resid = pqResid(s, d)
       val wCw = Window.partitionBy(col("cluster")).orderBy(col("vec_id"))
       var cb: Array[(Long, Int, Int, Array[Double])] = resid
@@ -702,7 +690,7 @@ object SimilarityOps {
         }
       }
       cb
-    })
+    }
 
   /** Trained IVF-PQ chain for q309: ONE embeddings scan (the persisted
     * q111 grid corpus) → trained coarse assignment (residual working

@@ -93,6 +93,41 @@ class BenchSpec extends AnyFunSuite {
     assert(out.contains("gen_floors selftest OK"))
   }
 
+  test("gen_floors.py reads Bench's own records and refuses an empty set") {
+    // run a copy in a scratch tree, so the committed tsv is never written
+    import java.nio.file.{Files, Path}
+    val root = TestSpark.tempDir("graft-gen-floors")
+    Files.createDirectories(root.resolve("scripts"))
+    Files.copy(Path.of("scripts/gen_floors.py"),
+      root.resolve("scripts/gen_floors.py"))
+    val tsv = root.resolve("scripts/bench_floors.tsv")
+    val before = "# old floors\nsf0.01\tq1\t1.000\n"
+    Files.writeString(tsv, before)
+    def gen(dir: Path): (Int, String) = {
+      val pb = new ProcessBuilder("python3", "scripts/gen_floors.py",
+        dir.toString)
+      pb.directory(root.toFile)
+      pb.redirectErrorStream(true)
+      val p = pb.start()
+      val out = scala.io.Source.fromInputStream(p.getInputStream).mkString
+      (p.waitFor(), out)
+    }
+    val empty = Files.createDirectories(root.resolve("empty"))
+    val (rc0, out0) = gen(empty)
+    assert(rc0 != 0, s"an empty capture set exited 0:\n$out0")
+    assert(Files.readString(tsv) === before)
+    val caps = Files.createDirectories(root.resolve("caps"))
+    Files.writeString(caps.resolve("sf0.01-1792440000.json"),
+      """{"metric":"total","queries":{"q1":0.5,"q2":0.7},"jobs":{"q1":9}}""")
+    Files.writeString(caps.resolve("bench_0.01_1.json"),
+      """{"queries":{"q1":0.4}}""")
+    val (rc1, out1) = gen(caps)
+    assert(rc1 === 0, out1)
+    val rows = scala.io.Source.fromFile(tsv.toFile).getLines()
+      .filterNot(_.startsWith("#")).toList
+    assert(rows === List("sf0.01\tq1\t0.400", "sf0.01\tq2\t0.700"))
+  }
+
   test("top: spec is parsed from the right, so paths may contain ':'") {
     assert(Bench.parseTop("top:f") === ("f", 30))
     assert(Bench.parseTop("top:f:7") === ("f", 7))

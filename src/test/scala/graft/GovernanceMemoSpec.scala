@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ops.GovernanceOps
+import graft.ops.SessionMemo
 
 /** The closure family's build-once contract (VERDICT r9 item 1).
   *
@@ -23,8 +23,8 @@ class GovernanceMemoSpec extends AnyFunSuite {
     // warm the family: whoever is first in this session pays the build
     val labels = SparkEntry.queries("q57_star_clusters")(spark, dir).count()
     assert(labels > 0)
-    val pb = GovernanceOps.pairsBuilds.get()
-    val cb = GovernanceOps.closureBuilds.get()
+    val pb = SessionMemo.builds("pairs")
+    val cb = SessionMemo.builds("labels")
 
     // the r9 failure mode: evict every cached/persisted block mid-battery
     spark.catalog.clearCache()
@@ -39,9 +39,9 @@ class GovernanceMemoSpec extends AnyFunSuite {
     spark.catalog.clearCache()
     assert(SparkEntry.queries("q114_curation_funnel")(spark, dir).count() > 0)
 
-    assert(GovernanceOps.pairsBuilds.get() == pb,
+    assert(SessionMemo.builds("pairs") == pb,
       "LSH pair set was rebuilt after cache eviction")
-    assert(GovernanceOps.closureBuilds.get() == cb,
+    assert(SessionMemo.builds("labels") == cb,
       "StarCC closure was rebuilt after cache eviction")
   }
 
@@ -49,14 +49,14 @@ class GovernanceMemoSpec extends AnyFunSuite {
     // q141 builds (or reads) the labels-lpa artifact
     assert(SparkEntry.queries("q141_label_propagation")(spark, dir)
       .count() > 0)
-    val pb = GovernanceOps.pairsBuilds.get()
-    val lb = GovernanceOps.lpaBuilds.get()
+    val pb = SessionMemo.builds("pairs")
+    val lb = SessionMemo.builds("labels-lpa")
     spark.catalog.clearCache() // the r10 regression: no in-memory carryover
     // q197 must compute modularity purely from the family artifacts
     assert(SparkEntry.queries("q197_modularity")(spark, dir).count() > 0)
-    assert(GovernanceOps.pairsBuilds.get() == pb,
+    assert(SessionMemo.builds("pairs") == pb,
       "q197 re-ran the LSH pass q141's family artifact already paid for")
-    assert(GovernanceOps.lpaBuilds.get() == lb,
+    assert(SessionMemo.builds("labels-lpa") == lb,
       "q197 re-ran the 3 LPA rounds q141 already built")
   }
 
@@ -65,10 +65,10 @@ class GovernanceMemoSpec extends AnyFunSuite {
     // this one built, yet must arrive at the same pair set
     val q104 = SparkEntry.queries("q104_source_dup_matrix")
     val here = q104(spark, dir).count()
-    val pb = GovernanceOps.pairsBuilds.get()
+    val pb = SessionMemo.builds("pairs")
     val other = spark.newSession()
     assert(q104(other, dir).count() == here)
-    assert(GovernanceOps.pairsBuilds.get() == pb + 1,
+    assert(SessionMemo.builds("pairs") == pb + 1,
       "the new session did not build the LSH pair set exactly once")
   }
 }

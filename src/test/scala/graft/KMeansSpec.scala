@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.SessionMemo
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q111 k-means training invariants the oracle hash can't see on its own:
@@ -17,8 +18,9 @@ class KMeansSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def run(rounds: Int): Map[Long, (Long, Double)] =
-    ops.SimilarityOps.kmeansTrain(spark, dir, rounds)
+  private def run(rounds: Int,
+      s: org.apache.spark.sql.SparkSession = spark): Map[Long, (Long, Double)] =
+    ops.SimilarityOps.kmeansTrain(s, dir, rounds)
       .collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
       .toMap
@@ -41,17 +43,18 @@ class KMeansSpec extends AnyFunSuite {
 
   test("q111 result is independent of input partitioning") {
     val base = run(3)
-    // drop the memoized Lloyd state so the second run genuinely
-    // RE-TRAINS under the different shuffle partitioning — without this
-    // the memo would hand back the first run's centroids and the test
-    // would only exercise the final assignment
-    ops.SimilarityOps.kmMemoClear()
+    // a new session RE-TRAINS under the different shuffle partitioning
+    // (the memo is per session), so this is more than the final
+    // assignment; a second call in that session reuses its training
     val spark2 = spark.newSession()
     spark2.conf.set("spark.sql.shuffle.partitions", "7")
-    val other = ops.SimilarityOps.kmeansTrain(spark2, dir, 3)
-      .collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2)))
-      .toMap
+    val b0 = SessionMemo.builds("km-3-8")
+    val other = run(3, spark2)
+    assert(SessionMemo.builds("km-3-8") == b0 + 1,
+      "the new session did not train exactly once")
+    assert(run(3, spark2) == other)
+    assert(SessionMemo.builds("km-3-8") == b0 + 1,
+      "a second call in the same session trained again")
     assert(other == base)
   }
 
@@ -61,7 +64,6 @@ class KMeansSpec extends AnyFunSuite {
       ops.SimilarityOps.pqCodebooksLocal(s, dir)
         .map { case (cl, j, cwid, arr) => ((cl, j, cwid), arr.toSeq) }
         .toMap
-    ops.SimilarityOps.pqMemoClear()
     val base = snap(spark)
     // training moved: at least one codeword differs from its seed (a
     // seed is an INTEGER residual subvector, so any trained mean with a
@@ -70,13 +72,17 @@ class KMeansSpec extends AnyFunSuite {
       "every codeword is still integer-valued: training never updated")
     // partition-count independence, the q111 determinism claim one
     // quantizer down: integer residual-grid sums + one IEEE division
-    // per dim make the retrained codebooks bit-identical under a
-    // different shuffle partitioning
-    ops.SimilarityOps.pqMemoClear()
+    // per dim make the codebooks a new session retrains bit-identical
+    // under a different shuffle partitioning
     val spark2 = spark.newSession()
     spark2.conf.set("spark.sql.shuffle.partitions", "7")
+    val b0 = SessionMemo.builds("pq")
     val other = snap(spark2)
+    assert(SessionMemo.builds("pq") == b0 + 1,
+      "the new session did not train its codebooks exactly once")
+    assert(snap(spark2) == other)
+    assert(SessionMemo.builds("pq") == b0 + 1,
+      "a second call in the same session trained again")
     assert(other == base)
-    ops.SimilarityOps.pqMemoClear()
   }
 }
