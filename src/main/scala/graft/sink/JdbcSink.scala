@@ -53,6 +53,8 @@ object JdbcSink {
   JdbcDialects.registerDialect(DerbyVarcharDialect)
 
   val BatchSize = 50000
+  /** Parallel connections per table write (one per DF partition). */
+  private val WritePartitions = 8
 
   /** (table, column DDL) in WRITE ORDER: dims first, then the hub, then
     * bridges — every FK target is loaded before its source. */
@@ -177,12 +179,12 @@ object JdbcSink {
     } finally con.close()
   }
 
-  /** O-5: batched append of one table (batchsize 50 000, bounded parallel
-    * connections — each DF partition opens one). A table with an identity
-    * column is written through a single connection (see the header). */
-  def writeTable(df: DataFrame, url: String, table: String,
-      numPartitions: Int = 8): Unit =
-    df.coalesce(if (hasIdentity(table)) 1 else numPartitions)
+  /** O-5: batched append of one table (batchsize 50 000, at most
+    * [[WritePartitions]] parallel connections — each DF partition opens
+    * one). A table with an identity column is written through a single
+    * connection (see the header). */
+  def writeTable(df: DataFrame, url: String, table: String): Unit =
+    df.coalesce(if (hasIdentity(table)) 1 else WritePartitions)
       .write.format("jdbc")
       .option("url", url)
       .option("dbtable", table)

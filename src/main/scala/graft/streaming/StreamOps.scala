@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row,
+  SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -273,21 +274,6 @@ object StreamOps {
       .filter(col("jaccard") >= 0.5)
   }
 
-  /** Streaming drift monitor: per event-time window, the chi-square
-    * terms of the window's length histogram against a STATIC reference
-    * corpus — q96's batch-over-batch gate run continuously at ingestion
-    * (alert when a window's chi2 spikes: the incoming mix changed). The
-    * whole window histogram is ONE streaming aggregate (13 fixed-bucket
-    * conditional sums — no second stateful agg for the window total),
-    * exploded after the window closes and met by the broadcast reference
-    * histogram in a stateless stream-static join. State = open windows ×
-    * 13 counters, bounded by the watermark. Pure expressions + a static
-    * join, so the identical code runs in batch mode (q99's oracle twin).
-    * ALL 13 buckets are emitted per window, including n_new = 0 rows:
-    * a reference-heavy bucket that vanishes from a window is the
-    * strongest possible mix shift, and its (0 − e)²/e = e term must
-    * reach the alert, not be dropped as an absent group. Input:
-    * docs (ts, doc_id, text); reference (n_chars). */
   /** Streaming Benford gate — q175's first-digit audit as a continuous
     * monitor: per event-time hour window, the observed first-digit
     * histogram against the literal Benford masses
@@ -451,6 +437,21 @@ object StreamOps {
         col("col.top_counts").as("cnt"))
   }
 
+  /** Streaming drift monitor: per event-time window, the chi-square
+    * terms of the window's length histogram against a STATIC reference
+    * corpus — q96's batch-over-batch gate run continuously at ingestion
+    * (alert when a window's chi2 spikes: the incoming mix changed). The
+    * whole window histogram is ONE streaming aggregate (13 fixed-bucket
+    * conditional sums — no second stateful agg for the window total),
+    * exploded after the window closes and met by the broadcast reference
+    * histogram in a stateless stream-static join. State = open windows ×
+    * 13 counters, bounded by the watermark. Pure expressions + a static
+    * join, so the identical code runs in batch mode (q99's oracle twin).
+    * ALL 13 buckets are emitted per window, including n_new = 0 rows:
+    * a reference-heavy bucket that vanishes from a window is the
+    * strongest possible mix shift, and its (0 − e)²/e = e term must
+    * reach the alert, not be dropped as an absent group. Input:
+    * docs (ts, doc_id, text); reference (n_chars). */
   def driftMonitor(docs: DataFrame, reference: DataFrame): DataFrame = {
     val nBuckets = 13
     val ref = reference
@@ -653,17 +654,93 @@ object StreamOps {
           col("share") > col("weight") * lit(2.0))
   }
 
+  /** Default per-window global token budget for the admission gate:
+    * sized so at the test SFs the flooded source saturates its share
+    * while honest sources clear theirs (q305's batch twin pins the
+    * arithmetic under the hash gate). */
+  val AdmissionWindowTokens = 4096.0
+
   final case class AdmitIn(ts: java.sql.Timestamp, wstart: String,
       wend_ms: Long, source: String, doc_id: Long, h: Long, n_toks: Long,
       quota: Long)
   final case class AdmitDecision(window_start: String, source: String,
       doc_id: Long, n_toks: Long, admitted: Boolean)
+  final case class DeferDecision(wstart: String, source: String,
+      doc_id: Long, n_toks: Long, status: String)
+  /** A deferral controller's per-source state: the current window's end,
+    * its running token cumsum, the source's quota and the pending list
+    * of (hash, doc_id, n_toks, hop). */
+  final case class DeferState(wendMs: Long, cum: Long, quota: Long,
+      pending: List[(Long, Long, Long, Int)])
 
-  /** Default per-window global token budget for [[admissionThrottle]]:
-    * sized so at the test SFs the flooded source saturates its share
-    * while honest sources clear theirs (q305's batch twin pins the
-    * arithmetic under the hash gate). */
-  val AdmissionWindowTokens = 4096.0
+  /** The admission gate's row prep, one definition so that both
+    * controllers agree on windows, priority and quotas: the 1 h
+    * watermark, the broadcast join to the (source, weight) targets (rows
+    * of an unweighted source drop here), the hour window's start and
+    * end, the "q305:" hash priority and quota = floor(weight ·
+    * `windowTokens`). Columns: [[AdmitIn]]'s, then `extra` unchanged. */
+  private def admissionRows(docs: DataFrame,
+      targets: Seq[(String, Double)], windowTokens: Double,
+      extra: Seq[String] = Nil): DataFrame = {
+    require(targets.nonEmpty, "admission targets must be non-empty")
+    val sess = docs.sparkSession
+    import sess.implicits._
+    val wt = targets.toDF("__src", "__w")
+    val win = window(col("ts"), "1 hour")
+    docs
+      .withWatermark("ts", "1 hour")
+      .join(broadcast(wt), col("source") === col("__src"))
+      .select(Seq(col("ts"),
+        date_format(win.getField("start"), TsFmt).as("wstart"),
+        (unix_timestamp(win.getField("end")) * 1000).as("wend_ms"),
+        col("source"), col("doc_id"),
+        graft.ops.LlmKit.strHash(concat(lit("q305:"),
+          col("doc_id").cast("string"))).as("h"),
+        col("n_toks"),
+        floor(col("__w") * lit(windowTokens)).cast("long").as("quota")) ++
+        extra.map(col): _*)
+  }
+
+  /** The drop controller behind [[admissionThrottle]] and
+    * [[throttledIngestCorpus]]: keyed by (window, source) with ONE long
+    * of state, the tokens offered so far. Each batch's rows are taken in
+    * (hash, doc_id) order and a row is admitted iff the running cumsum
+    * still fits its quota; `emit` turns every prepared row and its
+    * decision into an output row, so any extra prep column rides along.
+    * The key must stay (window, source): keyed by source alone, a window
+    * split across two batches would have its second half decided
+    * against a later window's quota. */
+  private def dropController[U: Encoder](rows: DataFrame)(
+      emit: (Row, Boolean) => U): Dataset[U] = {
+    val sess = rows.sparkSession
+    import sess.implicits._
+    rows
+      .groupByKey(r =>
+        (r.getAs[String]("wstart"), r.getAs[String]("source")))
+      .flatMapGroupsWithState[Long, U](
+        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (_: (String, String), it: Iterator[Row], state: GroupState[Long]) =>
+          if (state.hasTimedOut) { state.remove(); Iterator.empty }
+          else {
+            var cum = state.getOption.getOrElse(0L)
+            val arr = it.toArray
+              .sortBy(r => (r.getAs[Long]("h"), r.getAs[Long]("doc_id")))
+            val out = arr.toList.map { r =>
+              cum += r.getAs[Long]("n_toks")
+              emit(r, cum <= r.getAs[Long]("quota"))
+            }
+            state.update(cum)
+            // late-arriving rows (watermark already past the window) are
+            // still decided, but the expiry must never be set behind the
+            // current watermark — clamp forward so the state dies on the
+            // next watermark advance instead of crashing the query
+            state.setTimeoutTimestamp(math.max(
+              arr.head.getAs[Long]("wend_ms") + 3600000L,
+              state.getCurrentWatermarkMs() + 1))
+            out.iterator
+          }
+      }
+  }
 
   /** Streaming admission controller — the CONTROL half of the q301
     * mixture monitor (r15 verdict item 4): per event-time hour, each
@@ -676,139 +753,133 @@ object StreamOps {
     * achieved mixture stays inside the monitor's [w/2, 2w] band instead
     * of just alarming about it.
     *
-    * State shape: flatMapGroupsWithState keyed by (window, source) with
-    * ONE long of state (tokens OFFERED so far) — K·active-windows
-    * scalars cluster-wide, expired by event-time timeout one hour past
-    * the window end. Admission is the PREFIX rule: a document is
-    * admitted iff the group's running offered-token cumsum, taken in
-    * deterministic (md5-salt, doc_id) priority order within each batch,
-    * still fits the quota — exactly the window-cumsum rule the
-    * hash-gated q305 batch twin replays in SQL (a skip-greedy variant
-    * would admit slightly more but is not window-expressible, so batch
-    * and stream could never be oracle-pinned to each other). A
+    * State shape ([[dropController]]): flatMapGroupsWithState keyed by
+    * (window, source) with ONE long of state (tokens OFFERED so far) —
+    * K·active-windows scalars cluster-wide, expired by event-time
+    * timeout one hour past the window end. Admission is the PREFIX
+    * rule: a document is admitted iff the group's running offered-token
+    * cumsum, taken in deterministic (md5-salt, doc_id) priority order
+    * within each batch, still fits the quota — exactly the window-cumsum
+    * rule the hash-gated q305 batch twin replays in SQL (a skip-greedy
+    * variant would admit slightly more but is not window-expressible, so
+    * batch and stream could never be oracle-pinned to each other). A
     * single-batch window reproduces the batch rule row-for-row; across
     * batches the prefix accumulates in arrival order — the honest
     * semantics of a live gate. The spec pins both: one-batch parity,
-    * and the quota/band properties under a two-batch flood. Input
-    * schema: (ts TIMESTAMP, doc_id LONG, source STRING, n_toks LONG). */
+    * and the quota/band properties under a two-batch flood. Input schema:
+    * (ts TIMESTAMP, doc_id LONG, source STRING, n_toks LONG). */
   def admissionThrottle(docs: DataFrame, targets: Seq[(String, Double)],
       windowTokens: Double = AdmissionWindowTokens):
       Dataset[AdmitDecision] = {
-    require(targets.nonEmpty, "admission targets must be non-empty")
     val sess = docs.sparkSession
     import sess.implicits._
-    val wt = targets.toDF("__src", "__w")
-    val win = window(col("ts"), "1 hour")
-    val prepared = docs
-      .withWatermark("ts", "1 hour")
-      .join(broadcast(wt), col("source") === col("__src"))
-      .select(col("ts"),
-        date_format(win.getField("start"), TsFmt).as("wstart"),
-        (unix_timestamp(win.getField("end")) * 1000).as("wend_ms"),
-        col("source"), col("doc_id"),
-        graft.ops.LlmKit.strHash(concat(lit("q305:"),
-          col("doc_id").cast("string"))).as("h"),
-        col("n_toks"),
-        floor(col("__w") * lit(windowTokens)).cast("long").as("quota"))
-      .as[AdmitIn]
-    prepared
-      .groupByKey(r => (r.wstart, r.source))
-      .flatMapGroupsWithState[Long, AdmitDecision](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case ((wstart, source), rows, state) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var cum = state.getOption.getOrElse(0L)
-            val arr = rows.toArray.sortBy(r => (r.h, r.doc_id))
-            val out = arr.map { r =>
-              cum += r.n_toks
-              AdmitDecision(wstart, source, r.doc_id, r.n_toks,
-                cum <= r.quota)
-            }
-            state.update(cum)
-            // late-arriving rows (watermark already past the window) are
-            // still decided, but the expiry must never be set behind the
-            // current watermark — clamp forward so the state dies on the
-            // next watermark advance instead of crashing the query
-            state.setTimeoutTimestamp(math.max(
-              arr.head.wend_ms + 3600000L,
-              state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
-      }
+    dropController(admissionRows(docs, targets, windowTokens)) { (r, ok) =>
+      AdmitDecision(r.getAs("wstart"), r.getAs("source"), r.getAs("doc_id"),
+        r.getAs("n_toks"), ok)
+    }
   }
 
-  final case class ThrottleDoc(ts: java.sql.Timestamp, wstart: String,
-      wend_ms: Long, source: String, doc_id: Long, h: Long, n_toks: Long,
-      quota: Long, text: String, simhash: Long)
-  final case class AdmittedDoc(ts: java.sql.Timestamp, source: String,
-      doc_id: Long, n_toks: Long, text: String, simhash: Long)
-
-  /** [[admissionThrottle]]'s document-carrying form: same (window,
-    * source) prefix rule, same one-long state and event-time expiry,
-    * but rows keep their text and dedup signature and only ADMITTED
-    * documents are emitted — the shape a publish sink consumes
-    * directly. Input schema: (ts TIMESTAMP, doc_id LONG, source STRING,
-    * n_toks LONG, text STRING, simhash LONG). */
-  def admissionThrottleDocs(docs: DataFrame,
-      targets: Seq[(String, Double)],
-      windowTokens: Double = AdmissionWindowTokens):
-      Dataset[AdmittedDoc] = {
-    require(targets.nonEmpty, "admission targets must be non-empty")
+  /** The deferral controller behind [[admissionThrottleDefer]] (`hops` =
+    * 1) and [[admissionThrottleDefer2]] (`hops` = 2): a document that
+    * overflows its window is re-offered in each of the next `hops`
+    * windows before it is dropped. State per source ([[DeferState]]):
+    * the current window end, its running cum, the quota and the pending
+    * list tagged with each document's hop — bounded by `hops` windows'
+    * overflow.
+    *
+    * Within a window the pending cohorts rank first, oldest hop first,
+    * each by the same (hash, doc_id) priority, then new documents; the
+    * admission rule is the prefix token-cumsum ≤ quota throughout, and
+    * EVERY pending token (landed or not) counts in the window's prefix,
+    * exactly like q305's dropped docs. A pending document lands with
+    * status `admitted_deferred` (one hop) or `admitted_h<hop>`; one that
+    * misses at hop `hops` is `dropped`. Rows walk the state forward
+    * window by window, resolving the pending list at each; a late row
+    * for an already-passed window is decided against the CURRENT
+    * window's remaining quota and, if it overflows, resolves at the
+    * next window the walk reaches — the honest live-gate reading, same
+    * spirit as q305's late handling.
+    *
+    * A deferred cohort's admission depends only on the prior windows
+    * and its own cumsum, never on the resolution window's new arrivals,
+    * so the event-time timeout (the window end + `hops` hours) drains
+    * the whole pending list at once, one window per remaining hop,
+    * instead of waiting for rows that will never come. */
+  private def deferralController(docs: DataFrame,
+      targets: Seq[(String, Double)], windowTokens: Double,
+      hops: Int): Dataset[DeferDecision] = {
     val sess = docs.sparkSession
     import sess.implicits._
-    val wt = targets.toDF("__src", "__w")
-    val win = window(col("ts"), "1 hour")
-    val prepared = docs
-      .withWatermark("ts", "1 hour")
-      .join(broadcast(wt), col("source") === col("__src"))
-      .select(col("ts"),
-        date_format(win.getField("start"), TsFmt).as("wstart"),
-        (unix_timestamp(win.getField("end")) * 1000).as("wend_ms"),
-        col("source"), col("doc_id"),
-        graft.ops.LlmKit.strHash(concat(lit("q305:"),
-          col("doc_id").cast("string"))).as("h"),
-        col("n_toks"),
-        floor(col("__w") * lit(windowTokens)).cast("long").as("quota"),
-        col("text"), col("simhash"))
-      .as[ThrottleDoc]
-    prepared
-      .groupByKey(r => (r.wstart, r.source))
-      .flatMapGroupsWithState[Long, AdmittedDoc](
+    // resolve the pending list at the window STARTING at `wsMs`: returns
+    // (decisions, carried token total, re-pends at the next window)
+    def resolve(source: String, pending: List[(Long, Long, Long, Int)],
+        quota: Long, wsMs: Long): (List[DeferDecision], Long,
+        List[(Long, Long, Long, Int)]) = {
+      var cum = 0L
+      var repends = List.empty[(Long, Long, Long, Int)]
+      // built per call: DateTimeFormatter is not serializable, so it
+      // must not be captured by the flatMapGroupsWithState closure
+      val ws = java.time.format.DateTimeFormatter.ofPattern(TsFmt)
+        .withZone(java.time.ZoneId.of("UTC"))
+        .format(java.time.Instant.ofEpochMilli(wsMs))
+      val out = pending.sortBy(p => (-p._4, p._1, p._2)).flatMap {
+        case (h, docId, toks, hop) =>
+          cum += toks
+          if (cum <= quota)
+            Some(DeferDecision(ws, source, docId, toks,
+              if (hops == 1) "admitted_deferred" else s"admitted_h$hop"))
+          else if (hop < hops) {
+            repends ::= ((h, docId, toks, hop + 1))
+            None
+          } else
+            Some(DeferDecision(ws, source, docId, toks, "dropped"))
+      }
+      (out, cum, repends)
+    }
+    admissionRows(docs, targets, windowTokens).as[AdmitIn]
+      .groupByKey(_.source)
+      .flatMapGroupsWithState[DeferState, DeferDecision](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case ((_, _), rows, state) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var cum = state.getOption.getOrElse(0L)
-            val arr = rows.toArray.sortBy(r => (r.h, r.doc_id))
-            val out = arr.flatMap { r =>
-              cum += r.n_toks
-              if (cum <= r.quota)
-                Some(AdmittedDoc(r.ts, r.source, r.doc_id, r.n_toks,
-                  r.text, r.simhash))
-              else None
-            }
-            state.update(cum)
-            state.setTimeoutTimestamp(math.max(
-              arr.head.wend_ms + 3600000L,
-              state.getCurrentWatermarkMs() + 1))
-            out.iterator
+        case (source, rows, state) =>
+          val out = scala.collection.mutable.ArrayBuffer
+            .empty[DeferDecision]
+          val arr = rows.toArray.sortBy(r => (r.wend_ms, r.h, r.doc_id))
+          var st = state.getOption.getOrElse(
+            DeferState(arr.head.wend_ms, 0L, arr.head.quota, Nil))
+          def advance(): Unit = {
+            val (res, carried, repends) =
+              resolve(source, st.pending, st.quota, st.wendMs)
+            out ++= res
+            st = DeferState(st.wendMs + 3600000L, carried, st.quota,
+              repends)
           }
+          if (state.hasTimedOut) {
+            while (st.pending.nonEmpty) advance()
+            state.remove()
+          } else {
+            for (r <- arr) {
+              while (r.wend_ms > st.wendMs) advance()
+              st = st.copy(cum = st.cum + r.n_toks)
+              if (st.cum <= st.quota)
+                out += DeferDecision(r.wstart, source, r.doc_id,
+                  r.n_toks, "admitted")
+              else
+                st = st.copy(pending =
+                  (r.h, r.doc_id, r.n_toks, 1) :: st.pending)
+            }
+            state.update(st)
+            state.setTimeoutTimestamp(math.max(
+              st.wendMs + hops * 3600000L,
+              state.getCurrentWatermarkMs() + 1))
+          }
+          out.iterator
       }
   }
-
-  final case class DeferIn(ts: java.sql.Timestamp, wstart: String,
-      nwstart: String, wend_ms: Long, source: String, doc_id: Long,
-      h: Long, n_toks: Long, quota: Long)
-  final case class DeferDecision(wstart: String, source: String,
-      doc_id: Long, n_toks: Long, status: String)
-  final case class DeferState(wendMs: Long, cum: Long, quota: Long,
-      pending: List[(Long, Long, Long, String)])
 
   /** [[admissionThrottle]]'s DEFER variant (r16 verdict item 3): excess
     * documents are re-offered ONCE in the next hour window instead of
-    * dropped. Semantics (the window-cumsum-expressible rule the batch
-    * twin q310 replays):
+    * dropped — [[deferralController]] with one hop. Semantics (the
+    * window-cumsum-expressible rule the batch twin q310 replays):
     *
     *  - within a window, deferred docs rank FIRST (among themselves by
     *    the same (hash, doc_id) priority), then new docs; admission is
@@ -826,221 +897,44 @@ object StreamOps {
     *
     * Conservation — offered == admitted + admitted_deferred + dropped +
     * deferred_out — is pinned per (window, source) by q310's
-    * `conserved` column and doc-for-doc by StreamOpsSpec. State per
-    * source: current window end, running cum, quota, and the pending
-    * deferral list — bounded by ONE window's overflow (the one-hop
-    * rule), expiring via event-time timeout one window after the last
-    * seen (resolving any pending docs first, since deferred docs'
-    * admission depends only on their own cumsum, never on the next
-    * window's new arrivals). Late rows for an already-advanced window
-    * are decided against the CURRENT window's remaining quota — the
-    * honest live-gate reading, same spirit as q305's late handling. */
-  /** Shared watermark/window/priority/quota prep for the deferral
-    * throttles — one definition so the one-hop and two-hop variants can
-    * never disagree about ranking or quotas. */
-  private def prepareDefer(docs: DataFrame,
-      targets: Seq[(String, Double)],
-      windowTokens: Double): Dataset[DeferIn] = {
-    require(targets.nonEmpty, "admission targets must be non-empty")
-    val sess = docs.sparkSession
-    import sess.implicits._
-    val wt = targets.toDF("__src", "__w")
-    val win = window(col("ts"), "1 hour")
-    docs
-      .withWatermark("ts", "1 hour")
-      .join(broadcast(wt), col("source") === col("__src"))
-      .select(col("ts"),
-        date_format(win.getField("start"), TsFmt).as("wstart"),
-        date_format(win.getField("end"), TsFmt).as("nwstart"),
-        (unix_timestamp(win.getField("end")) * 1000).as("wend_ms"),
-        col("source"), col("doc_id"),
-        graft.ops.LlmKit.strHash(concat(lit("q305:"),
-          col("doc_id").cast("string"))).as("h"),
-        col("n_toks"),
-        floor(col("__w") * lit(windowTokens)).cast("long").as("quota"))
-      .as[DeferIn]
-  }
-
+    * `conserved` column and doc-for-doc by StreamOpsSpec. The state
+    * expires via event-time timeout one window after the last seen,
+    * resolving any pending docs first. Emitted statuses: `admitted`,
+    * `admitted_deferred`, `dropped`. */
   def admissionThrottleDefer(docs: DataFrame,
       targets: Seq[(String, Double)],
       windowTokens: Double = AdmissionWindowTokens):
-      Dataset[DeferDecision] = {
-    val sess = docs.sparkSession
-    import sess.implicits._
-    val prepared = prepareDefer(docs, targets, windowTokens)
-    // resolve a pending list at its next window: deferred docs rank
-    // first, so their fate is their own (hash, id)-ordered cumsum vs
-    // the quota; ALL their tokens (admitted or dropped) carry into the
-    // window's prefix as the deferred-in total
-    def resolve(pending: List[(Long, Long, Long, String)], quota: Long):
-        (List[DeferDecision], Long) = {
-      var d = 0L
-      val out = pending.sortBy(p => (p._1, p._2)).map {
-        case (_, docId, toks, nw) =>
-          d += toks
-          DeferDecision(nw, "", docId, toks,
-            if (d <= quota) "admitted_deferred" else "dropped")
-      }
-      (out, d)
-    }
-    prepared
-      .groupByKey(_.source)
-      .flatMapGroupsWithState[DeferState, DeferDecision](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (source, rows, state) =>
-          if (state.hasTimedOut) {
-            val st = state.get
-            val (res, _) = resolve(st.pending, st.quota)
-            state.remove()
-            res.map(_.copy(source = source)).iterator
-          } else {
-            val arr = rows.toArray.sortBy(r => (r.wend_ms, r.h, r.doc_id))
-            val quota = arr.head.quota
-            var st = state.getOption
-              .getOrElse(DeferState(arr.head.wend_ms, 0L, quota, Nil))
-            val out = scala.collection.mutable.ArrayBuffer
-              .empty[DeferDecision]
-            for (r <- arr) {
-              while (r.wend_ms > st.wendMs) {
-                val (res, tdNext) = resolve(st.pending, quota)
-                out ++= res.map(_.copy(source = source))
-                st = DeferState(st.wendMs + 3600000L, tdNext, quota, Nil)
-              }
-              st = st.copy(cum = st.cum + r.n_toks)
-              if (st.cum <= quota)
-                out += DeferDecision(r.wstart, source, r.doc_id,
-                  r.n_toks, "admitted")
-              else
-                st = st.copy(pending =
-                  (r.h, r.doc_id, r.n_toks, r.nwstart) :: st.pending)
-            }
-            state.update(st)
-            state.setTimeoutTimestamp(math.max(
-              st.wendMs + 3600000L,
-              state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
-      }
-  }
-
-  final case class Defer2State(wendMs: Long, cum: Long, quota: Long,
-      pending: List[(Long, Long, Long, Long, Int)])
+      Dataset[DeferDecision] =
+    deferralController(docs, targets, windowTokens, hops = 1)
 
   /** [[admissionThrottleDefer]] generalized to TWO hops (r17 verdict
-    * item 5): a document that overflows its first window is re-offered
-    * in the next window (hop 1) and, if it misses again, ONCE more in
-    * the window after that (hop 2) before being dropped. Priority
-    * within a window is hop-descending — the hop-2 cohort ranks first,
-    * then hop-1, then new documents; within a cohort the same
-    * (hash, doc_id) order as everywhere else. Admission stays the
-    * prefix token-cumsum ≤ quota, so the admitted set of every cohort
-    * is a rank prefix and the cross-window coupling collapses to FOUR
-    * scalars per (source, window) — deferred-in token totals t1/t2 and
-    * admitted-cum boundaries a0/a1 — which is exactly the recurrence
-    * the batch twin q314 unrolls (its `conserved` column certifies the
-    * rollup). Key property the expressibility argument leans on: a
-    * deferred cohort's admission depends only on the PRIOR windows'
-    * scalars and its own cumsum, never on the resolution window's new
-    * arrivals — which is why a state timeout may resolve both
-    * remaining hops immediately (≤ 2 bounded rounds) instead of
-    * waiting for rows that will never come. State per source is
-    * bounded by TWO windows' overflow. Emitted statuses: `admitted`,
-    * `admitted_h1`, `admitted_h2`, `dropped`. */
+    * item 5) — [[deferralController]] with two hops: a document that
+    * overflows its first window is re-offered in the next window (hop 1)
+    * and, if it misses again, ONCE more in the window after that (hop 2)
+    * before being dropped. Priority within a window is hop-descending —
+    * the hop-2 cohort ranks first, then hop-1, then new documents;
+    * within a cohort the same (hash, doc_id) order as everywhere else.
+    * Admission stays the prefix token-cumsum ≤ quota, so the admitted
+    * set of every cohort is a rank prefix and the cross-window coupling
+    * collapses to FOUR scalars per (source, window) — deferred-in token
+    * totals t1/t2 and admitted-cum boundaries a0/a1 — which is exactly
+    * the recurrence the batch twin q314 unrolls (its `conserved` column
+    * certifies the rollup). A state timeout two windows past the last
+    * seen resolves both remaining hops at once. Emitted statuses:
+    * `admitted`, `admitted_h1`, `admitted_h2`, `dropped`. */
   def admissionThrottleDefer2(docs: DataFrame,
       targets: Seq[(String, Double)],
       windowTokens: Double = AdmissionWindowTokens):
-      Dataset[DeferDecision] = {
-    val sess = docs.sparkSession
-    import sess.implicits._
-    val prepared = prepareDefer(docs, targets, windowTokens)
-    // resolve the pending cohorts at the window STARTING at `wsMs`:
-    // hop-2 docs first, then hop-1, each by (hash, id); every pending
-    // token (admitted or not) carries into the window's prefix; hop-1
-    // misses re-pend at the NEXT window as hop 2, hop-2 misses drop.
-    // Returns (decisions, carried token total, re-pends).
-    def resolve2(pending: List[(Long, Long, Long, Long, Int)],
-        quota: Long, wsMs: Long): (List[DeferDecision], Long,
-        List[(Long, Long, Long, Long, Int)]) = {
-      var cum = 0L
-      var repends = List.empty[(Long, Long, Long, Long, Int)]
-      // built per call: DateTimeFormatter is not serializable, so it
-      // must not be captured by the flatMapGroupsWithState closure
-      val ws = java.time.format.DateTimeFormatter.ofPattern(TsFmt)
-        .withZone(java.time.ZoneId.of("UTC"))
-        .format(java.time.Instant.ofEpochMilli(wsMs))
-      val out = pending.sortBy(p => (-p._5, p._1, p._2)).map {
-        case (h, docId, toks, _, hop) =>
-          cum += toks
-          if (cum <= quota)
-            Some(DeferDecision(ws, "", docId, toks, s"admitted_h$hop"))
-          else if (hop == 1) {
-            repends ::= ((h, docId, toks, wsMs + 3600000L, 2))
-            None
-          } else
-            Some(DeferDecision(ws, "", docId, toks, "dropped"))
-      }.flatten
-      (out, cum, repends.reverse)
-    }
-    prepared
-      .groupByKey(_.source)
-      .flatMapGroupsWithState[Defer2State, DeferDecision](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        case (source, rows, state) =>
-          if (state.hasTimedOut) {
-            // bounded two-round drain: deferred admissions never depend
-            // on new arrivals, so both hops resolve immediately
-            var st = state.get
-            val out = scala.collection.mutable.ArrayBuffer
-              .empty[DeferDecision]
-            var wsMs = st.wendMs
-            var pend = st.pending
-            while (pend.nonEmpty) {
-              val (res, _, rep) = resolve2(pend, st.quota, wsMs)
-              out ++= res.map(_.copy(source = source))
-              pend = rep
-              wsMs += 3600000L
-            }
-            state.remove()
-            out.iterator
-          } else {
-            val arr = rows.toArray.sortBy(r => (r.wend_ms, r.h, r.doc_id))
-            val quota = arr.head.quota
-            var st = state.getOption
-              .getOrElse(Defer2State(arr.head.wend_ms, 0L, quota, Nil))
-            val out = scala.collection.mutable.ArrayBuffer
-              .empty[DeferDecision]
-            for (r <- arr) {
-              while (r.wend_ms > st.wendMs) {
-                val (res, carried, repends) =
-                  resolve2(st.pending, quota, st.wendMs)
-                out ++= res.map(_.copy(source = source))
-                st = Defer2State(st.wendMs + 3600000L, carried, quota,
-                  repends)
-              }
-              st = st.copy(cum = st.cum + r.n_toks)
-              if (st.cum <= quota)
-                out += DeferDecision(r.wstart, source, r.doc_id,
-                  r.n_toks, "admitted")
-              else
-                st = st.copy(pending =
-                  (r.h, r.doc_id, r.n_toks, r.wend_ms, 1) :: st.pending)
-            }
-            state.update(st)
-            // the drain may need up to TWO windows past the last seen
-            state.setTimeoutTimestamp(math.max(
-              st.wendMs + 7200000L,
-              state.getCurrentWatermarkMs() + 1))
-            out.iterator
-          }
-      }
-  }
+      Dataset[DeferDecision] =
+    deferralController(docs, targets, windowTokens, hops = 2)
 
   /** The full ingest control loop, composed as the bronze→silver chain
     * a production lake runs: stage 1 ([[ingestCorpus]]) lands the
     * gate/decontamination/dedup survivors exactly-once under
     * `stageDir`; stage 2 re-reads the landed batches AS A STREAM and
-    * meters them through [[admissionThrottleDocs]] with the kept-pool
-    * DoReMi targets, landing only the ADMITTED documents under
+    * meters them through [[admissionThrottle]]'s drop controller with
+    * the kept-pool DoReMi targets, landing only the ADMITTED documents
+    * (text and signature carried through the controller) under
     * `outDir`. Chaining through storage keeps each query a single
     * stateful operator (Spark's arbitrary-state op does not compose
     * with the watermark dedup inside one query plan) and gives the
@@ -1065,8 +959,12 @@ object StreamOps {
         .as("source"),
         size(split(col("text"), " ")).cast("long").as("n_toks"),
         col("text"), col("simhash"))
-    val admitted = admissionThrottleDocs(survivors, targets, windowTokens)
-    publishStream(admitted.toDF()
+    val rows = admissionRows(survivors, targets, windowTokens,
+      Seq("text", "simhash"))
+    val decided = dropController(rows)(
+      (r, ok) => Row.fromSeq(r.toSeq :+ ok))(
+      Encoders.row(rows.schema.add("admitted", BooleanType)))
+    publishStream(decided.filter(col("admitted"))
       .select(col("ts"), col("doc_id"), col("text"), col("simhash"),
         col("source")),
       outDir, s"$checkpointRoot/admit")

@@ -935,9 +935,15 @@ class StreamOpsSpec extends AnyFunSuite {
   }
 
   private def deferRows(docs: DataFrame,
+      targets: Seq[(String, Double)]): Seq[(Long, String, Long, Long, Long, Long)] =
+    decisionRows(floodedDocs(docs), targets)
+
+  /** (window start sec, source, doc_id, hash, n_toks, quota) per offered
+    * doc of a weighted source — the reference folds' input. */
+  private def decisionRows(offered: DataFrame,
       targets: Seq[(String, Double)]): Seq[(Long, String, Long, Long, Long, Long)] = {
     val wMap = targets.toMap
-    floodedDocs(docs)
+    offered
       .filter(col("source").isin(wMap.keys.toSeq: _*))
       .withColumn("wsec", unix_timestamp(col("ts")) -
         pmod(unix_timestamp(col("ts")), lit(3600L)))
@@ -1261,6 +1267,65 @@ class StreamOpsSpec extends AnyFunSuite {
       case (_, (st, ws)) => st == "admitted_deferred" && ws == w3 + 3600
     }
     assert(crossed, "no deferral crossed the batch boundary")
+  }
+
+  /** Runs the hop-`hops` deferral throttle over the flooded sf0.01
+    * stream followed by a far-future one-doc chunk from a weighted source
+    * other than src0. The sentinel drives the watermark past every real
+    * window, so src0's last pending list can only resolve through its
+    * event-time timeout; the stream must then equal the reference fold
+    * at the sentinel's watermark doc for doc, with nothing left pending,
+    * and the drain must decide docs in every window it walks. */
+  private def assertTimeoutDrain(hops: Int): Unit = {
+    val sfDir = "/root/testdata/sf0.01"
+    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+    val targets = graft.sink.CorpusBuild.doremiTargets(spark, sfDir)
+    val sentinelSec = 1700000000L + 30L * 24 * 3600
+    val sentinel = spark.range(1).select(
+      timestamp_seconds(lit(sentinelSec)).as("ts"), lit(-7L).as("doc_id"),
+      lit(targets.filter(_._1 != "src0").maxBy(_._2)._1).as("source"),
+      lit(5L).as("n_toks"))
+    val dir = TestSpark.tempDir(s"graft-defer-ttl$hops").toString
+    val t0 = System.currentTimeMillis() - 600000
+    writeChunk(dir)(floodedDocs(docs), "c0.parquet", t0)
+    writeChunk(dir)(sentinel, "c1.parquet", t0 + 60000)
+    val table = s"t_defer_ttl$hops"
+    if (hops == 1) runDeferAdmission(dir, targets, table)
+    else runDefer2Admission(dir, targets, table)
+    val got = spark.table(table).collect()
+      .map(r => r.getAs[Long]("doc_id") ->
+        (r.getAs[String]("status"), r.getAs[String]("wstart")))
+      .toMap
+    val rows = decisionRows(floodedDocs(docs).unionByName(sentinel),
+      targets)
+    val ref =
+      if (hops == 1) referenceDefer(rows, sentinelSec - 3600)
+      else referenceDefer2(rows, sentinelSec - 3600)
+    assert(!ref.values.exists(_._1 == "pending"),
+      "the reference left a deferral pending past the sentinel")
+    val fmt = java.time.format.DateTimeFormatter
+      .ofPattern("yyyy-MM-dd HH:mm:ss")
+      .withZone(java.time.ZoneId.of("UTC"))
+    assert(got === ref.map { case (id, (st, w)) =>
+      id -> ((st, fmt.format(java.time.Instant.ofEpochSecond(w))))
+    })
+    // src0's pending list resolved on timeout, one window per hop
+    val src0 = rows.filter(_._2 == "src0")
+    val src0Ids = src0.map(_._3).toSet
+    val lastW = src0.map(_._1).max
+    for (k <- 1 to hops)
+      assert(ref.exists { case (id, (_, w)) =>
+        src0Ids(id) && w == lastW + k * 3600L
+      }, s"the timeout drain decided nothing in its window $k")
+  }
+
+  test("deferral throttle: the event-time timeout drains the pending " +
+      "list (one hop)") {
+    assertTimeoutDrain(1)
+  }
+
+  test("two-hop deferral: the event-time timeout drains both hops") {
+    assertTimeoutDrain(2)
   }
 
   test("throttled ingest corpus: gates → dedup → admission → " +
